@@ -61,11 +61,16 @@ import org.apache.spark.sql.types.StructType
   * DECODE, DATEADD/DATEDIFF with Redshift part abbreviations, bare
   * VARCHAR/TEXT casts, GETDATE/LEN renames, LISTAGG pass-through.
   *
-  * Everything the rewriter does is textual and literal-span-aware: content
-  * of single-quoted SQL string literals is never touched. DuckDB/Trino
-  * literals are ANSI ('' doubling, backslash plain — backslashes are doubled
-  * for Spark's escaping parser); Snowflake/BigQuery literals use backslash
-  * escapes exactly as Spark does and are scanned accordingly.
+  * Everything the rewriter does is textual, and every rewrite asks one
+  * lexer ([[SqlLexer]]) whether a position is code: string literals,
+  * quoted identifiers, comments and hints are never rewritten, and a quote
+  * inside a comment or a quoted identifier opens no literal. The lexer
+  * takes the two dialect properties that change how text lexes:
+  * [[Dialect.literalBackslashEscapes]] (DuckDB/Trino literals are ANSI —
+  * '' doubling, backslash plain, so backslashes are doubled for Spark's
+  * escaping parser; Snowflake/BigQuery literals use backslash escapes
+  * exactly as Spark does) and, for [[Engine]]'s name flattening only,
+  * [[Dialect.doubleQuotedIsString]].
   */
 sealed trait Dialect {
   def rewrite(spark: SparkSession, sql: String,
@@ -93,11 +98,11 @@ sealed trait Dialect {
     * Redshift — `standard_conforming_strings = off` ancestry) or treat
     * backslash as a PLAIN character with ''-doubling the only escape
     * (the ANSI family: DuckDB, Trino, Postgres, SQLite, Oracle,
-    * TSQL, Teradata, Tableau, Exasol, Druid). Drives
-    * [[Engine]]'s name-flattening literal scan, which runs on the raw
-    * input text BEFORE this dialect's rewrite — scanning an ANSI literal
-    * like `'C:\'` with backslash escapes would swallow its closing quote
-    * and corrupt everything after it.
+    * TSQL, Teradata, Tableau, Exasol, Druid). Also drives how
+    * [[Engine]]'s name flattening lexes the raw input text BEFORE this
+    * dialect's rewrite — lexing an ANSI literal like `'C:\'` with
+    * backslash escapes would swallow its closing quote and corrupt
+    * everything after it.
     */
   def literalBackslashEscapes: Boolean = true
 }
@@ -166,7 +171,7 @@ object Dialect {
     */
   case object DuckDbish extends Dialect {
     override val literalBackslashEscapes: Boolean = false
-    // word-boundary + optional space before '(' + literal-span filtered: a
+    // word-boundary + optional space before '(' + code only: a
     // READ_JSON mention inside a string literal must NOT raise, and
     // `READ_JSON ('x')` with a space must still be caught.
     private val unsupportedRe =
@@ -183,9 +188,7 @@ object Dialect {
 
     def rewrite(spark: SparkSession, sql: String,
         schemas: Map[String, StructType]): String = {
-      val spans = literalSpans(sql)
-      unsupportedRe.findAllMatchIn(sql).find(m => outsideLiterals(spans, m.start))
-        .foreach { m =>
+      SqlLexer(sql).codeMatches(unsupportedRe).foreach { m =>
           throw new graft.UnsupportedError(
             s"dialect construct ${m.group(1)}(...) is not supported; use READ_CSV or register a table")
         }
@@ -210,7 +213,7 @@ object Dialect {
         // post-collect rename would drop null elements via raw
         // collect_list, r15 verdict item 5); the list_* renames below
         // are distinct names and unaffected
-        s => renameFunctions(s, Map("list" -> "array_agg")),
+        s => renameWords(s, Map("list" -> "array_agg"), calls = true),
         s => rewriteAggFilter(s, esc = true),
         // DuckDB shares the inline-ORDER-BY array_agg but defaults to
         // NULLS LAST in BOTH sort directions (Postgres flips on DESC);
@@ -220,7 +223,7 @@ object Dialect {
         rewriteStrftime,
         rewriteStringSplit,
         rewriteEpoch,
-        s => renameFunctions(s, renames),
+        s => renameWords(s, renames, calls = true),
         // LAST: membership null-placement pin (DuckDB sorts NULLS LAST
         // both ways) — after every rewrite that emits or carries a
         // window / truncated ORDER BY
@@ -263,7 +266,7 @@ object Dialect {
         rewriteKeepNullArrayAgg,
         s => rewriteArrayLiteral(s, esc = false),
         s => rewriteUnnest(s, esc = false),
-        s => renameFunctions(s, renames),
+        s => renameWords(s, renames, calls = true),
         // Trino speaks the full ANSI paging surface (r16 — raw parse
         // errors before): FETCH FIRST n ROWS WITH TIES rides the shared
         // rank builder in always-last mode (Trino's documented default:
@@ -302,7 +305,7 @@ object Dialect {
     def rewrite(spark: SparkSession, sql: String,
         schemas: Map[String, StructType]): String = {
       val steps: Seq[String => String] = Seq(
-        s => renameFunctions(s, renames, esc = true), // to_char joins to_varchar
+        s => renameWords(s, renames, esc = true, calls = true), // to_char joins to_varchar
         s => rewriteDoubleQuotedIdents(s, esc = true),
         // Snowflake supports `SELECT TOP n` (no PERCENT/TIES — those
         // spellings are T-SQL's and Snowflake's parser rejects them —
@@ -380,7 +383,7 @@ object Dialect {
         // IGNORE-NULLS ordered aggregation; BigQuery sorts nulls SMALLEST
         rewriteBqArrayAgg,
         s => renameWords(s, typeRenames, esc = true),
-        s => renameFunctions(s, renames, esc = true))
+        s => renameWords(s, renames, esc = true, calls = true))
       steps.foldLeft(sql)((s, f) => f(s))
     }
   }
@@ -415,7 +418,7 @@ object Dialect {
         rewriteMysqlDateFns,
         rewriteMysqlDayNames,
         rewriteMysqlLocate,
-        s => renameFunctions(s, renames, esc = true))
+        s => renameWords(s, renames, esc = true, calls = true))
       steps.foldLeft(sql)((s, f) => f(s))
     }
   }
@@ -472,7 +475,7 @@ object Dialect {
         s => rewriteFetchFirstWithTies(s, Some(spark)), // FETCH FIRST n ROWS WITH TIES (rank filter)
         rewriteTsqlOffsetFetch, // ANSI OFFSET…FETCH paging (Postgres-legal)
         rewriteFetchFirst,      // …and the standalone FETCH FIRST n
-        s => renameFunctions(s, renames),
+        s => renameWords(s, renames, calls = true),
         // LAST: membership null-placement pin (Postgres sorts nulls largest)
         s => pinSortNulls(s, esc = true))
       steps.foldLeft(sql)((s, f) => f(s))
@@ -529,8 +532,8 @@ object Dialect {
         s => rewriteFetchFirstWithTies(s, Some(spark)), // FETCH FIRST n ROWS WITH TIES (rank filter)
         rewriteTsqlOffsetFetch, // Oracle 12c OFFSET…FETCH paging
         rewriteFetchFirst,      // …and the standalone FETCH FIRST n
-        s => rewriteWord(s, "MINUS", "EXCEPT"),
-        s => rewriteWord(s, "SYSDATE", "current_timestamp()"),
+        s => renameWords(s, Map("MINUS" -> "EXCEPT"), esc = true),
+        s => renameWords(s, Map("SYSDATE" -> "current_timestamp()"), esc = true),
         // LAST: membership null-placement pin (Oracle sorts nulls largest)
         s => pinSortNulls(s, esc = true))
       steps.foldLeft(sql)((s, f) => f(s))
@@ -574,7 +577,7 @@ object Dialect {
         rewriteTsqlDateAdd,
         rewriteTsqlDateDiff,
         rewriteTsqlDatePart,
-        s => renameFunctions(s, renames, esc = true))
+        s => renameWords(s, renames, esc = true, calls = true))
       steps.foldLeft(sql)((s, f) => f(s))
     }
   }
@@ -612,7 +615,7 @@ object Dialect {
         rewriteRsDateDiff,
         rewriteRsBareTypes,
         s => rewriteQualify(s, esc = true, spark = Some(spark)),
-        s => renameFunctions(s, renames, esc = true),
+        s => renameWords(s, renames, esc = true, calls = true),
         // LAST: membership null-placement pin (Redshift sorts nulls largest)
         s => pinSortNulls(s, esc = true))
       steps.foldLeft(sql)((s, f) => f(s))
@@ -663,7 +666,7 @@ object Dialect {
           qualifyRewrite = Some(q => rewriteQualify(q, esc = true, spark = Some(spark))),
           minusIsSetOp = true), // MINUS is a Teradata set operator
         s => rewriteQualify(s, esc = true, spark = Some(spark)),
-        s => renameFunctions(s, renames, esc = true))
+        s => renameWords(s, renames, esc = true, calls = true))
       steps.foldLeft(sql)((s, f) => f(s))
     }
   }
@@ -710,7 +713,7 @@ object Dialect {
         rewriteChUniq,
         rewriteChEmpty,
         rewriteChPosition,
-        s => renameFunctions(s, renames, esc = true),
+        s => renameWords(s, renames, esc = true, calls = true),
         // LAST: membership null-placement pin (ClickHouse defaults to
         // NULLS LAST in both sort directions, like DuckDB)
         s => pinSortNulls(s, alwaysLast = true, esc = true))
@@ -772,7 +775,7 @@ object Dialect {
         rewriteTableauDateTrunc,
         rewriteTableauDateName,
         rewriteTableauSplit,
-        s => renameFunctions(s, renames, esc = true))
+        s => renameWords(s, renames, esc = true, calls = true))
       steps.foldLeft(sql)((s, f) => f(s))
     }
   }
@@ -847,42 +850,12 @@ object Dialect {
         s => rewriteDoubleQuotedIdents(s, esc = true),
         s => rewriteDruidTime(s),
         s => rewriteDruidDiv(s),
-        s => renameFunctions(s, renames, esc = true))
+        s => renameWords(s, renames, esc = true, calls = true))
       steps.foldLeft(sql)((s, f) => f(s))
     }
   }
 
-  // ---- literal-span machinery ---------------------------------------------
-
-  /** [start, end) spans of single-quoted string literals. ANSI/DuckDB/Trino
-    * literals escape ONLY via doubled quotes ('') — a backslash is a plain
-    * character (a literal like 'C:\' must close at its quote, or every
-    * rewrite after it lands in the wrong place). Snowflake/BigQuery literals
-    * use backslash escapes (as Spark's default parser does) — pass
-    * `backslashEscapes = true` for those dialects. Every rewrite below
-    * leaves these spans untouched.
-    */
-  private[graft] def literalSpans(sql: String,
-      backslashEscapes: Boolean = false): Vector[(Int, Int)] = {
-    val spans = Vector.newBuilder[(Int, Int)]
-    var i = 0
-    while (i < sql.length) {
-      if (sql.charAt(i) == '\'') {
-        val start = i
-        i += 1
-        var done = false
-        while (i < sql.length && !done) {
-          val c = sql.charAt(i)
-          if (backslashEscapes && c == '\\' && i + 1 < sql.length) i += 2
-          else if (c == '\'' && i + 1 < sql.length && sql.charAt(i + 1) == '\'') i += 2
-          else if (c == '\'') { done = true; i += 1 }
-          else i += 1
-        }
-        spans += ((start, i))
-      } else i += 1
-    }
-    spans.result()
-  }
+  // ---- lexer-driven helpers -----------------------------------------------
 
   /** Double every backslash inside string literals. DuckDB/Trino treat `\`
     * in a literal as a plain character; Spark's default parser processes it
@@ -890,77 +863,84 @@ object Dialect {
     * '\n' silently becomes a newline.
     */
   private[graft] def escapeBackslashLiterals(sql: String): String = {
-    val spans = literalSpans(sql)
+    if (sql.indexOf('\\') < 0) return sql
+    val lx = SqlLexer(sql)
     val out = new StringBuilder
     var i = 0
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (c == '\\' && !outsideLiterals(spans, i)) out.append("\\\\")
+      if (c == '\\' && lx.kind(i) == SqlLexer.Str) out.append("\\\\")
       else out.append(c)
       i += 1
     }
     out.toString
   }
 
-  private def outsideLiterals(spans: Vector[(Int, Int)], i: Int): Boolean =
-    !spans.exists(s => i >= s._1 && i < s._2)
-
-  /** `==` → `=` outside string literals. */
-  private[graft] def rewriteDoubleEquals(sql: String): String = {
-    val spans = literalSpans(sql)
+  /** `sql` with every match of `re` that starts in code replaced by `f`
+    * of it, left to right (the replacement is literal text). With
+    * `blank`, `re` runs over the comment-blanked text, so a comment
+    * between a clause's tokens cannot hide it; the splice still edits
+    * `sql`, so comments outside the replaced matches survive.
+    */
+  private def replaceInCode(sql: String, re: scala.util.matching.Regex,
+      esc: Boolean = false, blank: Boolean = false)(
+      f: scala.util.matching.Regex.Match => String): String = {
+    val scanned = if (blank) blankComments(sql, esc) else sql
     val out = new StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      if (outsideLiterals(spans, i) && sql.charAt(i) == '=' &&
-          i + 1 < sql.length && sql.charAt(i + 1) == '=') {
-        out.append('='); i += 2
-      } else { out.append(sql.charAt(i)); i += 1 }
+    var last = 0
+    SqlLexer(scanned, esc).codeMatches(re).foreach { m =>
+      out.append(sql.substring(last, m.start)).append(f(m))
+      last = m.end
     }
-    out.toString
+    out.append(sql.substring(last)).toString
   }
+
+  /** Every run of whitespace in code collapsed to one space. */
+  private[graft] def collapseSpaces(sql: String, esc: Boolean = false): String =
+    replaceInCode(sql, "\\p{javaWhitespace}+".r, esc)(_ => " ")
+
+  /** `==` → `=` in code. */
+  private[graft] def rewriteDoubleEquals(sql: String): String =
+    replaceInCode(sql, "==".r)(_ => "=")
 
   /** DuckDB `"ident"` → Spark backtick `ident` (doubled "" inside becomes a
     * literal quote). Spark's default parser reads double quotes as string
     * literals, which would silently change semantics — so always rewrite.
     */
   private[graft] def rewriteDoubleQuotedIdents(sql: String, esc: Boolean = false): String = {
-    val spans = literalSpans(sql, esc)
+    if (sql.indexOf('"') < 0) return sql
     val out = new StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      if (outsideLiterals(spans, i) && sql.charAt(i) == '"') {
-        val ident = new StringBuilder
-        i += 1
-        var done = false
-        while (i < sql.length && !done) {
-          val c = sql.charAt(i)
-          if (c == '"' && i + 1 < sql.length && sql.charAt(i + 1) == '"') {
-            ident.append('"'); i += 2
-          } else if (c == '"') { done = true; i += 1 }
-          else { ident.append(c); i += 1 }
-        }
-        out.append('`').append(ident.toString.replace("`", "``")).append('`')
-      } else { out.append(sql.charAt(i)); i += 1 }
+    var last = 0
+    SqlLexer(sql, esc).spans.foreach { sp =>
+      if (sp.kind == SqlLexer.Ident && sql.charAt(sp.start) == '"') {
+        val text = sql.substring(sp.start, sp.end)
+        // an even quote count means the closing quote is there
+        val body = text.substring(1, text.length - (1 - text.count(_ == '"') % 2))
+        out.append(sql.substring(last, sp.start)).append('`')
+          .append(body.replace("\"\"", "\"").replace("`", "``")).append('`')
+        last = sp.end
+      }
     }
-    out.toString
+    out.append(sql.substring(last)).toString
   }
 
   /** Start index of the operand ending at `e` (inclusive): a string literal,
     * a parenthesized/bracketed tail with its leading function name, or an
     * identifier/number. Shared by `rewriteColonCast` and `rewriteIntDiv`.
     */
-  private def operandStart(cur: String, spans: Vector[(Int, Int)], e: Int): Int =
+  private def operandStart(lx: SqlLexer, e: Int): Int = {
+    val cur = lx.sql
     cur.charAt(e) match {
       case '\'' =>
         // end of a string literal: find its span
-        spans.find(s => s._2 - 1 == e).map(_._1).getOrElse(
+        lx.spanAt(e).filter(_.end - 1 == e).map(_.start).getOrElse(
           throw new graft.UnsupportedError(s"unbalanced string literal at $e in: $cur"))
       case ')' | ']' =>
         var depth = 0
         var j = e
         var start = -1
         while (j >= 0 && start < 0) {
-          if (outsideLiterals(spans, j)) {
+          if (lx.isCode(j)) {
             val c = cur.charAt(j)
             if (c == ')' || c == ']') depth += 1
             else if (c == '(' || c == '[') { depth -= 1; if (depth == 0) start = j }
@@ -981,6 +961,7 @@ object Dialect {
       case other =>
         throw new graft.UnsupportedError(s"cannot parse operand '$other' at $e in: $cur")
     }
+  }
 
   /** DuckDB `a // b` integer division → Spark `a DIV b`. Measured against
     * the oracle DuckDB build: integer `//` TRUNCATES toward zero exactly as
@@ -991,18 +972,8 @@ object Dialect {
     * is out of scope. `//` cannot appear in any other SQL construct outside
     * a string literal, so the token rewrite is unambiguous.
     */
-  private[graft] def rewriteIntDiv(sql: String): String = {
-    val spans = literalSpans(sql)
-    val out = new StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      if (outsideLiterals(spans, i) && sql.charAt(i) == '/' &&
-          i + 1 < sql.length && sql.charAt(i + 1) == '/') {
-        out.append(" DIV "); i += 2
-      } else { out.append(sql.charAt(i)); i += 1 }
-    }
-    out.toString
-  }
+  private[graft] def rewriteIntDiv(sql: String): String =
+    replaceInCode(sql, "//".r)(_ => " DIV ")
 
   /** `expr::TYPE` → `CAST(expr AS TYPE)`. The operand is recovered by
     * scanning left: a string literal, a parenthesized/bracketed tail with its
@@ -1015,17 +986,8 @@ object Dialect {
     var cur = sql
     var guard = 0
     while (guard < 64) {
-      val spans = literalSpans(cur)
-      val idx = {
-        var i = 0
-        var found = -1
-        while (i < cur.length - 1 && found < 0) {
-          if (cur.charAt(i) == ':' && cur.charAt(i + 1) == ':' && outsideLiterals(spans, i))
-            found = i
-          else i += 1
-        }
-        found
-      }
+      val lx = SqlLexer(cur)
+      val idx = lx.codeMatches("::".r).map(_.start).nextOption().getOrElse(-1)
       if (idx < 0) return cur
       // --- type name after `::`
       var t = idx + 2
@@ -1046,7 +1008,7 @@ object Dialect {
       var e = idx - 1
       while (e >= 0 && cur.charAt(e) == ' ') e -= 1
       if (e < 0) throw new graft.UnsupportedError(s"no operand before '::' in: $cur")
-      val opStart = operandStart(cur, spans, e)
+      val opStart = operandStart(lx, e)
       val operand = cur.substring(opStart, e + 1)
       cur = cur.substring(0, opStart) + s"CAST($operand AS $typ)" + cur.substring(tEnd)
       guard += 1
@@ -1093,68 +1055,6 @@ object Dialect {
     out.toString
   }
 
-  /** Find the `)` matching the `(` at `open` (literal-span aware). */
-  /** The innermost parenthesized span enclosing position `at`:
-    * Some((open, close)) indices of the paren pair, None at depth 0 or
-    * on unbalanced text. Shared by the subquery-level WITH TIES /
-    * QUALIFY / DISTINCT ON recursions (r15 inline in WITH TIES;
-    * factored r16): the clause's enclosing statement — a subquery or a
-    * CTE body — is rewritten in place, then the caller rescans the
-    * splice.
-    */
-  private def enclosingParen(sql: String, spans: Vector[(Int, Int)],
-      at: Int): Option[(Int, Int)] = {
-    var i = at - 1
-    var d = 0
-    var open = -1
-    while (i >= 0 && open < 0) {
-      if (outsideLiterals(spans, i)) {
-        val c = sql.charAt(i)
-        if (c == ')') d += 1
-        else if (c == '(') { if (d == 0) open = i else d -= 1 }
-      }
-      i -= 1
-    }
-    if (open < 0) None
-    else {
-      val close = matchParen(sql, spans, open)
-      if (close < 0) None else Some((open, close))
-    }
-  }
-
-  private def matchParen(sql: String, spans: Vector[(Int, Int)], open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < sql.length) {
-      if (outsideLiterals(spans, i)) {
-        val c = sql.charAt(i)
-        if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth == 0) return i }
-      }
-      i += 1
-    }
-    -1
-  }
-
-  /** Split `sql[from, to)` on top-level commas (literal-span aware). */
-  private def splitArgs(sql: String, spans: Vector[(Int, Int)], from: Int, to: Int): Seq[String] = {
-    val args = Seq.newBuilder[String]
-    var depth = 0
-    var last = from
-    var i = from
-    while (i < to) {
-      if (outsideLiterals(spans, i)) {
-        val c = sql.charAt(i)
-        if (c == '(' || c == '[') depth += 1
-        else if (c == ')' || c == ']') depth -= 1
-        else if (c == ',' && depth == 0) { args += sql.substring(last, i); last = i + 1 }
-      }
-      i += 1
-    }
-    args += sql.substring(last, to)
-    args.result()
-  }
-
   private val SingleLiteral = """^\s*'(.*)'\s*$""".r
 
   /** `strftime(expr, '%Y-%m')` → `date_format(expr, 'yyyy-MM')`. The format
@@ -1167,12 +1067,12 @@ object Dialect {
     var changed = true
     while (changed) {
       changed = false
-      val spans = literalSpans(cur)
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)).foreach { m =>
+      val lx = SqlLexer(cur)
+      lx.codeMatches(re).nextOption().foreach { m =>
         val open = cur.indexOf('(', m.start)
-        val close = matchParen(cur, spans, open)
+        val close = lx.matchParen(open)
         if (close < 0) throw new graft.UnsupportedError(s"unbalanced strftime( in: $cur")
-        val args = splitArgs(cur, spans, open + 1, close)
+        val args = lx.splitArgs(open + 1, close)
         if (args.length != 2)
           throw new graft.UnsupportedError("strftime expects (expr, 'format')")
         val fmt = args(1) match {
@@ -1201,12 +1101,12 @@ object Dialect {
     var changed = true
     while (changed) {
       changed = false
-      val spans = literalSpans(cur)
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)).foreach { m =>
+      val lx = SqlLexer(cur)
+      lx.codeMatches(re).nextOption().foreach { m =>
         val open = cur.indexOf('(', m.start)
-        val close = matchParen(cur, spans, open)
+        val close = lx.matchParen(open)
         if (close < 0) throw new graft.UnsupportedError(s"unbalanced string_split( in: $cur")
-        val args = splitArgs(cur, spans, open + 1, close)
+        val args = lx.splitArgs(open + 1, close)
         if (args.length != 2)
           throw new graft.UnsupportedError("string_split expects (expr, separator)")
         val sep = args(1) match {
@@ -1224,255 +1124,75 @@ object Dialect {
     cur
   }
 
-  /** Rename `from(` → `to(` at word boundaries, outside string literals. */
-  private[graft] def renameFunctions(sql: String, renames: Map[String, String],
-      esc: Boolean = false): String = {
-    renames.foldLeft(sql) { case (cur, (from, to)) =>
-      val spans = literalSpans(cur, esc)
-      val re = ("(?i)\\b" + java.util.regex.Pattern.quote(from) + "\\s*\\(").r
-      val out = new StringBuilder
-      var last = 0
-      re.findAllMatchIn(cur).foreach { m =>
-        if (outsideLiterals(spans, m.start)) {
-          out.append(cur.substring(last, m.start)).append(to).append('(')
-          last = m.end
-        }
-      }
-      out.append(cur.substring(last))
-      out.toString
-    }
-  }
-
-  /** Rename bare words (type names like INT64 → BIGINT) at word boundaries,
-    * outside string literals.
+  /** Rename words in code at word boundaries, case-insensitively (type
+    * names like INT64 → BIGINT, keywords). With `calls`, only a word
+    * followed by `(` is renamed, and `from (` becomes `to(`.
     */
   private[graft] def renameWords(sql: String, renames: Map[String, String],
-      esc: Boolean = false): String = {
+      esc: Boolean = false, calls: Boolean = false): String = {
+    val (tail, suffix) = if (calls) ("\\s*\\(", "(") else ("\\b", "")
     renames.foldLeft(sql) { case (cur, (from, to)) =>
-      val spans = literalSpans(cur, esc)
-      val re = ("(?i)\\b" + java.util.regex.Pattern.quote(from) + "\\b").r
-      val out = new StringBuilder
-      var last = 0
-      re.findAllMatchIn(cur).foreach { m =>
-        if (outsideLiterals(spans, m.start)) {
-          out.append(cur.substring(last, m.start)).append(to)
-          last = m.end
-        }
-      }
-      out.append(cur.substring(last))
-      out.toString
+      replaceInCode(cur, ("(?i)\\b" + java.util.regex.Pattern.quote(from) + tail).r, esc)(
+        _ => to + suffix)
     }
   }
 
   // ---- Teradata -----------------------------------------------------------
 
-  /** Spans of single-quoted string literals PLUS double-quoted and
-    * backtick-quoted identifiers — the regions a KEYWORD rewriter must
-    * never touch (a column named `lt` quoted as `"lt"` is an identifier,
-    * not the LT comparator). Quote-doubling escapes both quote styles.
-    */
-  private[graft] def literalAndIdentSpans(sql: String,
-      backslashEscapes: Boolean = false): Vector[(Int, Int)] = {
-    val spans = Vector.newBuilder[(Int, Int)]
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'') {
-        val start = i
-        i += 1
-        var done = false
-        while (i < sql.length && !done) {
-          val ch = sql.charAt(i)
-          if (backslashEscapes && ch == '\\' && i + 1 < sql.length) i += 2
-          else if (ch == '\'' && i + 1 < sql.length && sql.charAt(i + 1) == '\'') i += 2
-          else if (ch == '\'') { done = true; i += 1 }
-          else i += 1
-        }
-        spans += ((start, i))
-      } else if (c == '"' || c == '`') {
-        val start = i
-        i += 1
-        var done = false
-        while (i < sql.length && !done) {
-          if (sql.charAt(i) == c && i + 1 < sql.length && sql.charAt(i + 1) == c) i += 2
-          else if (sql.charAt(i) == c) { done = true; i += 1 }
-          else i += 1
-        }
-        spans += ((start, i))
-      } else i += 1
-    }
-    spans.result()
-  }
-
-  /** One-pass lexer over the three opaque region kinds at once —
-    * string literals, quoted identifiers (both with quote-doubling
-    * escapes), and SQL comments (`-- …\n`, `/* … */`) — returning the
-    * spans plus whether any comment was seen. Interleaving matters
-    * (r16 fourth review): scanning literals FIRST let an apostrophe
-    * inside a comment flip literal parity and expose a real string
-    * literal's contents as clause text (or hide a real clause inside a
-    * bogus literal span).
-    */
-  private[graft] def opaqueSpans(s: String,
-      backslashEscapes: Boolean = false): (Vector[(Int, Int)], Boolean) = {
-    val kinds = opaqueSpanKinds(s, backslashEscapes)
-    (kinds.map { case (a, b, _) => (a, b) }, kinds.exists(_._3))
-  }
-
-  /** [[opaqueSpans]]'s underlying lexer with the span KIND kept —
-    * `(start, end, isComment)` — so callers that must treat comments
-    * differently from literals/quoted identifiers (e.g.
-    * [[blankComments]], which erases only the comment spans) can tell
-    * them apart without a second parse.
-    */
-  private[graft] def opaqueSpanKinds(s: String,
-      backslashEscapes: Boolean = false): Vector[(Int, Int, Boolean)] = {
-    val b = Vector.newBuilder[(Int, Int, Boolean)]
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') {
-        val st = i
-        i += 1
-        var done = false
-        while (i < s.length && !done) {
-          val ch = s.charAt(i)
-          if (backslashEscapes && ch == '\\' && i + 1 < s.length) i += 2
-          else if (ch == '\'' && i + 1 < s.length && s.charAt(i + 1) == '\'') i += 2
-          else if (ch == '\'') { done = true; i += 1 }
-          else i += 1
-        }
-        b += ((st, i, false))
-      } else if (c == '"' || c == '`') {
-        val st = i
-        i += 1
-        var done = false
-        while (i < s.length && !done) {
-          if (s.charAt(i) == c && i + 1 < s.length && s.charAt(i + 1) == c) i += 2
-          else if (s.charAt(i) == c) { done = true; i += 1 }
-          else i += 1
-        }
-        b += ((st, i, false))
-      } else if (c == '-' && i + 1 < s.length && s.charAt(i + 1) == '-') {
-        val e = s.indexOf('\n', i)
-        val end = if (e < 0) s.length else e + 1
-        b += ((i, end, true))
-        i = end
-      } else if (c == '/' && i + 1 < s.length && s.charAt(i + 1) == '*') {
-        // bracketed comments NEST in Spark (SPARK-28880) and in
-        // Postgres/DuckDB — ending at the first */ would leave the
-        // outer comment's tail as live statement text (r17 review).
-        // DELIBERATE Spark-lexer alignment (r18, from ADVICE): MySQL
-        // (and arguably Snowflake) do NOT nest — there, `/* a /* b */`
-        // is a complete comment, and this lexer reads it as unclosed,
-        // swallowing the statement tail into one opaque span. The
-        // blast radius is pathological inputs only: rewrites decline
-        // on opaque text (never splice into it), and Spark's own
-        // parser applies the SAME nesting rule to whatever passes
-        // through, so a divergent input dies loudly at the parser
-        // instead of silently changing meaning. If a non-nesting
-        // source dialect ever needs exact comment semantics, thread a
-        // per-dialect nesting flag like `backslashEscapes`.
-        val st = i
-        var d = 1
-        i += 2
-        while (i < s.length && d > 0) {
-          if (s.charAt(i) == '/' && i + 1 < s.length && s.charAt(i + 1) == '*') {
-            d += 1; i += 2
-          } else if (s.charAt(i) == '*' && i + 1 < s.length && s.charAt(i + 1) == '/') {
-            d -= 1; i += 2
-          } else i += 1
-        }
-        b += ((st, i, true))
-      } else i += 1
-    }
-    b.result()
-  }
-
-  /** Replace every SQL comment span with spaces of the same length,
-    * leaving literals and quoted identifiers (and their contents, even
-    * when they LOOK like comment markers) byte-identical. A `--` line
-    * comment's terminating newline is preserved only as the blank —
-    * the comment text can no longer swallow appended clauses, which is
-    * what lets [[pinSortNulls]] pin a key span that carries a comment
-    * instead of silently declining (r16 "what's wrong" item 1: the
-    * decline reverted the site to Spark's null polarity with no error).
+  /** Replace every SQL comment with spaces of the same length, leaving
+    * literals and quoted identifiers (and their contents, even when they
+    * LOOK like comment markers) byte-identical. A `--` line comment's
+    * terminating newline is blanked too, so the comment text can no
+    * longer swallow appended clauses; this lets [[pinSortNulls]] pin a
+    * key span that carries a comment instead of silently declining.
     */
   private[graft] def blankComments(s: String,
       backslashEscapes: Boolean = false): String = {
-    val kinds = opaqueSpanKinds(s, backslashEscapes)
-    if (!kinds.exists(_._3)) return s
+    if (!s.contains("--") && !s.contains("/*")) return s
+    val lx = SqlLexer(s, backslashEscapes)
+    def commentOrHint(j: Int) =
+      lx.kind(j) == SqlLexer.Comment || lx.kind(j) == SqlLexer.Hint
     val out = new StringBuilder(s)
-    kinds.foreach { case (a, b, isComment) =>
-      // Spark optimizer HINTS (`/*+ … */`) are comments to the lexer
-      // but plan directives to Spark — blanking one silently drops a
-      // BROADCAST/REPARTITION and changes the physical plan (r17
-      // review). A hint is honored by Spark ONLY directly after a
-      // SELECT keyword, so only THAT position is preserved (second r17
-      // review pass: preserving `/*+` text elsewhere — mid-select-list,
-      // inside ORDER BY keys — broke item naming and key splitting that
-      // blanking used to keep clean, for positions where the hint is
-      // inert anyway). A kept hint stays opaque for span purposes
-      // (parens inside it never skew a depth map) and, being a
-      // self-terminating block span, cannot swallow appended syntax
-      // the way a `--` line comment can.
-      val isHint = b - a >= 3 && s.charAt(a) == '/' && s.charAt(a + 1) == '*' &&
-        s.charAt(a + 2) == '+'
-      val afterSelect = isHint && {
-        // scan back over whitespace AND over prior comment/hint spans
-        // (third r17 review pass: Spark honors `SELECT /*+h1*/ /*+h2*/`
-        // and `SELECT /* note */ /*+h*/` — both hints must survive —
-        // and skipping spans whole also stops the word SELECT INSIDE a
-        // preceding comment from falsely qualifying an inert hint)
-        var j = a - 1
-        var moved = true
-        while (moved) {
-          moved = false
-          while (j >= 0 && s.charAt(j).isWhitespace) { j -= 1; moved = true }
-          kinds.find { case (ka, kb, kc) => kc && j >= ka && j < kb }
-            .foreach { case (ka, _, _) => j = ka - 1; moved = true }
-        }
+    lx.spans.foreach { sp =>
+      // Spark optimizer HINTS (`/*+ … */`) are plan directives — blanking
+      // one silently drops a BROADCAST/REPARTITION. Spark honors a hint
+      // ONLY directly after SELECT (possibly after other comments and
+      // hints: `SELECT /* note */ /*+ h1 */ /*+ h2 */`), so only there is
+      // it kept; elsewhere it is inert and blanked, so item naming and
+      // key splitting stay clean. The word SELECT inside a preceding
+      // comment does not count. A kept hint is self-terminating, so it
+      // cannot swallow appended syntax the way a `--` comment can.
+      val keptHint = sp.kind == SqlLexer.Hint && {
+        var j = sp.start - 1
+        while (j >= 0 && (s.charAt(j).isWhitespace || commentOrHint(j))) j -= 1
         j >= 5 && s.regionMatches(true, j - 5, "SELECT", 0, 6) &&
           (j - 6 < 0 || {
             val c = s.charAt(j - 6); !c.isLetterOrDigit && c != '_'
           })
       }
-      if (isComment && !(isHint && afterSelect)) {
-        var i = a; while (i < b) { out.setCharAt(i, ' '); i += 1 }
+      if (commentOrHint(sp.start) && !keptHint) {
+        var i = sp.start; while (i < sp.end) { out.setCharAt(i, ' '); i += 1 }
       }
     }
     out.toString
   }
 
-  /** The optimizer hint directly after the SELECT at `selIdx`, as
-    * `"/*+ … */ "` (trailing space) plus the index just past it — or
-    * `("", selIdx + 6)` when none. `spans` must be the opaque spans of
-    * `sql` so the hint's extent is the lexer's, not a regex guess.
-    * Shared by the QUALIFY and paging rewrites (r17 review: two copies
-    * had already appeared).
+  /** The optimizer hints directly after the SELECT at `selIdx`, as
+    * `"/*+ … */ "` (trailing space each) plus the index just past them —
+    * or `("", selIdx + 6)` when none. Spark's grammar is
+    * `SELECT (hint)* …`, so consecutive hint blocks are all consumed.
     */
-  private def leadingHint(sql: String, selIdx: Int,
-      spans: Vector[(Int, Int)]): (String, Int) = {
+  private def leadingHint(lx: SqlLexer, selIdx: Int): (String, Int) = {
+    val sql = lx.sql
     val out = new StringBuilder
     var end = selIdx + "SELECT".length
-    var hs = end
-    var more = true
-    // Spark's grammar is `SELECT (hint)* …` — CONSECUTIVE hint blocks
-    // are all honored, so all are consumed (third r17 review pass: a
-    // single-block capture left the second hint inside the first
-    // select item)
-    while (more) {
-      more = false
+    var hint = Option.empty[SqlLexer.Span]
+    do {
+      var hs = end
       while (hs < sql.length && sql.charAt(hs).isWhitespace) hs += 1
-      if (sql.startsWith("/*+", hs)) {
-        spans.find(_._1 == hs).foreach { case (a, b) =>
-          out.append(sql.substring(a, b)).append(' ')
-          hs = b
-          end = b
-          more = true
-        }
-      }
-    }
+      hint = lx.spanAt(hs).filter(sp => sp.start == hs && sp.kind == SqlLexer.Hint)
+      hint.foreach { sp => out.append(sql.substring(sp.start, sp.end)).append(' '); end = sp.end }
+    } while (hint.isDefined)
     (out.toString, end)
   }
 
@@ -1480,53 +1200,32 @@ object Dialect {
     * `(hint, isDistinct, itemsStart)`, with DISTINCT matched AFTER the
     * hint (the SELECT-anchored spelling misses `SELECT /*+ … */
     * DISTINCT`) and a named error when DISTINCT ON follows instead.
-    * Shared by the QUALIFY and paging rewrites (third r17 review pass:
-    * the trio had been duplicated between them).
+    * Shared by the QUALIFY and paging rewrites.
     */
-  private def hintAndDistinct(sql: String, selIdx: Int,
-      spans: Vector[(Int, Int)], onDistinctOn: => String): (String, Boolean, Int) = {
-    val (hint, afterHint) = leadingHint(sql, selIdx, spans)
-    val rest = sql.substring(afterHint)
+  private def hintAndDistinct(lx: SqlLexer, selIdx: Int,
+      onDistinctOn: => String): (String, Boolean, Int) = {
+    val (hint, afterHint) = leadingHint(lx, selIdx)
+    val rest = lx.sql.substring(afterHint)
     if ("(?is)^\\s*DISTINCT\\s+ON\\b".r.findFirstIn(rest).isDefined)
       throw new graft.UnsupportedError(onDistinctOn)
     val dm = "(?is)^\\s*DISTINCT\\b\\s*".r.findFirstMatchIn(rest)
     (hint, dm.isDefined, afterHint + dm.map(_.end).getOrElse(0))
   }
 
-  /** [[renameWords]] over [[literalAndIdentSpans]] — keyword rewriting
-    * that leaves quoted identifiers untouched.
-    */
-  private def renameWordsOutsideIdents(sql: String,
-      renames: Map[String, String]): String =
-    renames.foldLeft(sql) { case (cur, (from, to)) =>
-      val spans = literalAndIdentSpans(cur, backslashEscapes = true)
-      val re = ("(?i)\\b" + java.util.regex.Pattern.quote(from) + "\\b").r
-      val out = new StringBuilder
-      var last = 0
-      re.findAllMatchIn(cur).foreach { m =>
-        if (outsideLiterals(spans, m.start)) {
-          out.append(cur.substring(last, m.start)).append(to)
-          last = m.end
-        }
-      }
-      out.append(cur.substring(last))
-      out.toString
-    }
-
   /** `SEL` → `SELECT` — Teradata's statement-keyword abbreviation. Word
     * boundary, literal- and quoted-identifier-filtered (quote a column
     * actually named `sel` to keep it an identifier).
     */
   private[graft] def rewriteTeradataSel(sql: String): String =
-    renameWordsOutsideIdents(sql, Map("sel" -> "SELECT"))
+    renameWords(sql, Map("sel" -> "SELECT"), esc = true)
 
   /** Teradata keyword comparison operators — `EQ NE LT LE GT GE` → the
     * symbol forms. Word-boundary, literal- and quoted-identifier-filtered
     * (quote a column named like an operator keyword to keep it).
     */
   private[graft] def rewriteTeradataComparators(sql: String): String =
-    renameWordsOutsideIdents(sql, Map("eq" -> "=", "ne" -> "<>", "lt" -> "<",
-      "le" -> "<=", "gt" -> ">", "ge" -> ">="))
+    renameWords(sql, Map("eq" -> "=", "ne" -> "<>", "lt" -> "<",
+      "le" -> "<=", "gt" -> ">", "ge" -> ">="), esc = true)
 
   /** Infix `MOD` → `%`. Infix vs the Spark-native `MOD(a, b)` CALL is
     * decided by what PRECEDES the keyword — an infix MOD always follows a
@@ -1537,26 +1236,16 @@ object Dialect {
     * result sign follows the dividend, exactly like Spark's `%`.
     */
   private[graft] def rewriteTeradataInfixMod(sql: String): String = {
-    val spans = literalAndIdentSpans(sql, backslashEscapes = true)
-    val re = "(?i)\\bMOD\\b".r
-    val out = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(sql).foreach { m =>
-      if (outsideLiterals(spans, m.start)) {
-        var p = m.start - 1
-        while (p >= 0 && sql.charAt(p).isWhitespace) p -= 1
-        val infix = p >= 0 && {
-          val c = sql.charAt(p)
-          c.isLetterOrDigit || c == '_' || c == ')' || c == '`' || c == '"'
-        }
-        if (infix) {
-          out.append(sql.substring(last, m.start)).append("%")
-          last = m.end
-        }
+    val lx = SqlLexer(sql, backslashEscapes = true)
+    replaceInCode(sql, "(?i)\\bMOD\\b".r, esc = true) { m =>
+      var p = m.start - 1
+      while (p >= 0 && (sql.charAt(p).isWhitespace || lx.kind(p) == SqlLexer.Comment)) p -= 1
+      val infix = p >= 0 && {
+        val c = sql.charAt(p)
+        c.isLetterOrDigit || c == '_' || c == ')' || c == '`' || c == '"'
       }
+      if (infix) "%" else m.matched
     }
-    out.append(sql.substring(last))
-    out.toString
   }
 
   /** Teradata `**` exponent → `power(l, r)` for BOUNDED operand forms:
@@ -1576,54 +1265,26 @@ object Dialect {
     var changed = true
     while (changed) {
       changed = false
-      val spans = literalAndIdentSpans(cur, backslashEscapes = true)
-      def spanAt(i: Int): Option[(Int, Int)] =
-        spans.find(sp => i >= sp._1 && i < sp._2)
-      val idx = "\\*\\*".r.findAllMatchIn(cur)
-        .find(m => spanAt(m.start).isEmpty).map(_.start)
+      val lx = SqlLexer(cur, backslashEscapes = true)
+      val idx = lx.codeMatches("\\*\\*".r).nextOption().map(_.start)
       idx.foreach { at =>
         def isIdent(c: Char) = c.isLetterOrDigit || c == '_' || c == '.'
         def raise(side: String): Nothing = throw new graft.UnsupportedError(
           s"cannot bound the $side operand of ** in: $cur")
-        // index just after the ')' matching the '(' group ENDING at
-        // `close` (exclusive end given); literal spans skipped wholesale
-        def groupStart(closeExclusive: Int): Int = {
-          var i = closeExclusive - 1
-          var depth = 0
-          while (i >= 0) {
-            spanAt(i) match {
-              case Some(sp) => i = sp._1 - 1
-              case None =>
-                val c = cur.charAt(i)
-                if (c == ')') depth += 1
-                else if (c == '(') { depth -= 1; if (depth == 0) return i }
-                i -= 1
-            }
-          }
-          raise("left")
-        }
+        // start of the paren group whose `)` ends just before `closeExclusive`
+        def groupStart(closeExclusive: Int): Int =
+          lx.enclosingParen(closeExclusive - 1).map(_._1).getOrElse(raise("left"))
         // index just after the ')' matching the '(' AT `open`
         def groupEnd(open: Int): Int = {
-          var i = open
-          var depth = 0
-          while (i < cur.length) {
-            spanAt(i) match {
-              case Some(sp) => i = sp._2
-              case None =>
-                val c = cur.charAt(i)
-                if (c == '(') depth += 1
-                else if (c == ')') { depth -= 1; if (depth == 0) return i + 1 }
-                i += 1
-            }
-          }
-          raise("right")
+          val close = lx.matchParen(open)
+          if (close < 0) raise("right") else close + 1
         }
         // ---- left operand: [s, e) ----
         var e = at
         while (e > 0 && cur.charAt(e - 1).isWhitespace) e -= 1
         var s = e
-        if (s > 0 && spanAt(s - 1).isDefined) {
-          s = spanAt(s - 1).get._1 // quoted identifier operand
+        if (s > 0 && lx.spanAt(s - 1).isDefined) {
+          s = lx.spanAt(s - 1).get.start // quoted identifier operand
         } else if (s > 0 && cur.charAt(s - 1) == ')') {
           s = groupStart(s)
           while (s > 0 && isIdent(cur.charAt(s - 1))) s -= 1 // call name
@@ -1648,8 +1309,8 @@ object Dialect {
             re += 1
             while (re < cur.length && cur.charAt(re).isWhitespace) re += 1
           }
-          if (re < cur.length && spanAt(re).isDefined) {
-            re = spanAt(re).get._2 // quoted identifier operand
+          if (re < cur.length && lx.spanAt(re).isDefined) {
+            re = lx.spanAt(re).get.end // quoted identifier operand
           } else if (re < cur.length && cur.charAt(re) == '(') {
             re = groupEnd(re)
           } else {
@@ -1700,13 +1361,13 @@ object Dialect {
       guard += 1
       if (guard > 256)
         throw new graft.UnsupportedError(s"rewrite of $names did not terminate")
-      val spans = literalSpans(cur, esc)
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)).foreach { m =>
+      val lx = SqlLexer(cur, esc)
+      lx.codeMatches(re).nextOption().foreach { m =>
         val open = m.end - 1 // the regex consumed through '('
-        val close = matchParen(cur, spans, open)
+        val close = lx.matchParen(open)
         if (close < 0)
           throw new graft.UnsupportedError(s"unbalanced ${m.group(1)}( in: $cur")
-        val args = splitArgs(cur, spans, open + 1, close).map(_.trim)
+        val args = lx.splitArgs(open + 1, close).map(_.trim)
         cur = cur.substring(0, m.start) + transform(m.group(1), args) +
           cur.substring(close + 1)
         changed = true
@@ -1728,32 +1389,6 @@ object Dialect {
     }
 
   // ---- QUALIFY ------------------------------------------------------------
-
-  /** Paren depth before each character (literal-span aware). */
-  private def depthAt(sql: String, spans: Vector[(Int, Int)]): Array[Int] = {
-    val d = new Array[Int](sql.length + 1)
-    var depth = 0
-    var i = 0
-    while (i < sql.length) {
-      d(i) = depth
-      if (outsideLiterals(spans, i)) {
-        val c = sql.charAt(i)
-        if (c == '(') depth += 1 else if (c == ')') depth -= 1
-      }
-      i += 1
-    }
-    d(sql.length) = depth
-    d
-  }
-
-  /** First word-boundary match of `kw` at paren depth 0, outside literals,
-    * at or after `from`; -1 if none.
-    */
-  private def topLevelKeyword(sql: String, spans: Vector[(Int, Int)],
-      depth: Array[Int], kw: String, from: Int = 0): Int =
-    ("(?i)\\b" + kw + "\\b").r.findAllMatchIn(sql)
-      .find(m => m.start >= from && depth(m.start) == 0 && outsideLiterals(spans, m.start))
-      .map(_.start).getOrElse(-1)
 
   /** Output-column name of a select-list item: the identifier after a
     * trailing AS, or the last segment of a bare column reference. Anything
@@ -1827,10 +1462,10 @@ object Dialect {
     */
   private def resolveOrdinalSortKeys(ord: String, items: Seq[String],
       construct: String): String = {
-    val oSpans = literalSpans(ord, backslashEscapes = true)
+    val oLx = SqlLexer(ord, backslashEscapes = true)
     val ordinalRe =
       "(?is)^(\\d+)((?:\\s+(?:ASC|DESC))?(?:\\s+NULLS\\s+(?:FIRST|LAST))?)\\s*$".r
-    splitArgs(ord, oSpans, 0, ord.length).map(_.trim).map { part =>
+    oLx.splitArgs(0, ord.length).map(_.trim).map { part =>
       ordinalRe.findFirstMatchIn(part) match {
         case Some(pm) =>
           val n = pm.group(1).toInt
@@ -1880,18 +1515,17 @@ object Dialect {
     // confirmed parse-error repro on legal Snowflake text). Statements
     // the rewrite does not touch are returned byte-identical (sql0).
     val sql = blankComments(sql0, esc)
-    val spans = opaqueSpans(sql, esc)._1
-    val depth = depthAt(sql, spans)
-    val qIdx = topLevelKeyword(sql, spans, depth, "QUALIFY")
+    val lx = SqlLexer(sql, esc)
+    val depth = lx.depth
+    val qIdx = lx.topLevelKeyword("QUALIFY")
     if (qIdx < 0) {
       // SUBQUERY/CTE-level QUALIFY (r16 — a raw Spark parse error
       // before; `WITH x AS (SELECT … QUALIFY …)` is the canonical
       // Snowflake idiom): rewrite the innermost parenthesized statement
       // containing the clause in place, then rescan the splice
-      val m = "(?i)\\bQUALIFY\\b".r.findAllMatchIn(sql)
-        .find(mm => outsideLiterals(spans, mm.start) && depth(mm.start) > 0)
+      val m = lx.codeMatches("(?i)\\bQUALIFY\\b".r).find(mm => depth(mm.start) > 0)
         .getOrElse(return sql0)
-      val (open, close) = enclosingParen(sql, spans, m.start)
+      val (open, close) = lx.enclosingParen(m.start)
         .getOrElse(return sql0)
       val inner = sql.substring(open + 1, close)
       val rebuilt = rewriteQualify(inner, esc, spark)
@@ -1901,23 +1535,20 @@ object Dialect {
     }
     val afterQ = qIdx + "QUALIFY".length
     val boundary = Seq("ORDER", "LIMIT")
-      .map(kw => topLevelKeyword(sql, spans, depth, kw, afterQ))
+      .map(kw => lx.topLevelKeyword(kw, afterQ))
       .filter(_ >= 0)
       .sorted.headOption.getOrElse(sql.length)
     val inner = sql.substring(0, qIdx).trim
     val pred = sql.substring(afterQ, boundary).trim
     val tail = sql.substring(boundary)
     if (pred.isEmpty) throw new graft.UnsupportedError("QUALIFY requires a predicate")
-    val predSpans = opaqueSpans(pred, esc)._1
-    val hasWindow = "(?i)\\bOVER\\s*\\(".r.findAllMatchIn(pred)
-      .exists(m => outsideLiterals(predSpans, m.start))
+    val hasWindow = SqlLexer(pred, esc).codeMatches("(?i)\\bOVER\\s*\\(".r).nonEmpty
     if (!hasWindow) {
       s"SELECT * FROM ( $inner ) __qualify WHERE $pred $tail"
     } else {
-      val iSpans = opaqueSpans(inner, esc)._1
-      val iDepth = depthAt(inner, iSpans)
-      val selIdx = topLevelKeyword(inner, iSpans, iDepth, "SELECT")
-      val fromIdx = topLevelKeyword(inner, iSpans, iDepth, "FROM")
+      val iLx = SqlLexer(inner, esc)
+      val selIdx = iLx.topLevelKeyword("SELECT")
+      val fromIdx = iLx.topLevelKeyword("FROM")
       if (selIdx != 0 || fromIdx < 0)
         throw new graft.UnsupportedError(s"cannot locate SELECT … FROM around QUALIFY in: $sql")
       // a leading optimizer hint names no output column — item parsing
@@ -1928,11 +1559,11 @@ object Dialect {
       // OUTER projection re-applies it over the output names (__qual
       // never leaks into the distinct). DISTINCT ON has its own earlier
       // rewrite — named error if one reaches here.
-      val (hint, isDistinct, parseStart) = hintAndDistinct(inner, selIdx, iSpans,
+      val (hint, isDistinct, parseStart) = hintAndDistinct(iLx, selIdx,
         "QUALIFY with an inline window is not supported under SELECT DISTINCT ON " +
           "(rewrite DISTINCT ON first)")
       val rawItems =
-        splitArgs(inner, iSpans, parseStart, fromIdx).map(_.trim).filter(_.nonEmpty)
+        iLx.splitArgs(parseStart, fromIdx).map(_.trim).filter(_.nonEmpty)
       val items = expandStarItems(spark, rawItems,
         inner.substring(fromIdx), "QUALIFY")
       val names = items.map(itemName(_)).mkString(", ")
@@ -1957,31 +1588,10 @@ object Dialect {
     * touched — the EXCEPT set operator never follows `*`.
     */
   private[graft] def rewriteExclude(sql: String): String = {
-    val spans = literalSpans(sql)
-    val withParens = new StringBuilder
-    var last = 0
-    val re = """(?i)\*\s*EXCLUDE\s*\(""".r
-    re.findAllMatchIn(sql).foreach { m =>
-      if (outsideLiterals(spans, m.start)) {
-        withParens.append(sql.substring(last, m.start)).append("* EXCEPT (")
-        last = m.end
-      }
-    }
-    withParens.append(sql.substring(last))
-    val cur = withParens.toString
+    val withParens = replaceInCode(sql, """(?i)\*\s*EXCLUDE\s*\(""".r)(_ => "* EXCEPT (")
     // bare single-column form: * EXCLUDE col
-    val spans2 = literalSpans(cur)
-    val re2 = """(?i)\*\s*EXCLUDE\s+([A-Za-z_][A-Za-z0-9_]*)""".r
-    val out = new StringBuilder
-    last = 0
-    re2.findAllMatchIn(cur).foreach { m =>
-      if (outsideLiterals(spans2, m.start)) {
-        out.append(cur.substring(last, m.start)).append("* EXCEPT (").append(m.group(1)).append(")")
-        last = m.end
-      }
-    }
-    out.append(cur.substring(last))
-    out.toString
+    replaceInCode(withParens, """(?i)\*\s*EXCLUDE\s+([A-Za-z_][A-Za-z0-9_]*)""".r)(
+      m => s"* EXCEPT (${m.group(1)})")
   }
 
   /** DuckDB/BigQuery `SELECT * REPLACE (expr AS col[, …]) FROM <table>` —
@@ -2030,9 +1640,9 @@ object Dialect {
     * [[rewriteStarReplace]] and [[expandStarItems]] (r17 review: the
     * two copies had already started to drift).
     */
-  private def parseReplaceItems(text: String, spans: Vector[(Int, Int)],
+  private def parseReplaceItems(lx: SqlLexer,
       open: Int, close: Int, errPrefix: String): Map[String, String] = {
-    val pairs = splitArgs(text, spans, open + 1, close).map(_.trim).map { r =>
+    val pairs = lx.splitArgs(open + 1, close).map(_.trim).map { r =>
       "(?is)^(.*\\S)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*|`[^`]+`)$".r
         .findFirstMatchIn(r) match {
         case Some(mm) =>
@@ -2153,30 +1763,28 @@ object Dialect {
       // below): a ')' in the REPLACE list, a FROM, or a star clause
       // inside a COMMENT must not terminate the paren match, hijack
       // the FROM-token scan, or trigger the rewrite
-      val spans = opaqueSpans(cur, esc)._1
-      re.findAllMatchIn(cur)
-        .flatMap(m => if (outsideLiterals(spans, m.start))
-          starAt(cur, m.start).map { case (s0, q) => (m, s0, q) } else None)
+      val lx = SqlLexer(cur, esc)
+      lx.codeMatches(re)
+        .flatMap(m => starAt(cur, m.start).map { case (s0, q) => (m, s0, q) })
         .nextOption() match {
         case None => return cur
         case Some((m, replStart, qualifier)) =>
           val open = m.end - 1
-          val close = matchParen(cur, spans, open)
+          val close = lx.matchParen(open)
           if (close < 0)
             throw new graft.UnsupportedError(s"unbalanced * REPLACE( in: $cur")
-          val repls = parseReplaceItems(cur, spans, open, close, "* REPLACE")
+          val repls = parseReplaceItems(lx, open, close, "* REPLACE")
           // combined EXCLUDE clause (r19): names dropped BEFORE the
           // REPLACE applies — DuckDB's own evaluation order
           val excludes = parseStarExcludes(Option(m.group(1)), Option(m.group(2)))
-          val depth = depthAt(cur, spans)
+          val depth = lx.depth
           val d0 = depth(m.start)
           // anchor on the FROM TOKEN (not `FROM ident`) so a subquery FROM
           // `FROM (…) t` is seen and rejected here instead of silently
           // matching a LATER FROM in a union branch and expanding the star
           // against the wrong table's schema
-          val fromTok = "(?i)\\bFROM\\b".r.findAllMatchIn(cur)
-            .find(mm => mm.start > close && depth(mm.start) == d0 &&
-              outsideLiterals(spans, mm.start))
+          val fromTok = lx.codeMatches("(?i)\\bFROM\\b".r, close + 1)
+            .find(mm => depth(mm.start) == d0)
             .getOrElse(throw new graft.UnsupportedError(
               "* REPLACE requires a FROM <table> at the same query level"))
           val afterFrom = cur.substring(fromTok.end)
@@ -2209,8 +1817,8 @@ object Dialect {
               // for the paren match (r19, from ADVICE): a `)` inside a
               // comment within the derived text must not end the match
               // early and truncate the subquery
-              val fSpans = opaqueSpans(afterFrom, esc)._1
-              val dClose = matchParen(afterFrom, fSpans, wsLen)
+              val fLx = SqlLexer(afterFrom, esc)
+              val dClose = fLx.matchParen(wsLen)
               if (dClose < 0)
                 throw new graft.UnsupportedError(
                   s"unbalanced derived-table FROM after * REPLACE in: $cur")
@@ -2290,22 +1898,21 @@ object Dialect {
     // single-line window splice cannot be swallowed by a trailing `--`
     // comment. Untouched statements return byte-identical (sql0).
     val sql = blankComments(sql0, esc)
-    val spans = opaqueSpans(sql, esc)._1
-    val depth = depthAt(sql, spans)
+    val lx = SqlLexer(sql, esc)
+    val depth = lx.depth
     // SPAN-BASED detection (third r17 review pass: a regex hint-group
     // `(/\*\+.*?\*/)?` could span LIVE SQL between two unrelated */
     // sequences and match a false DISTINCT ON): each SELECT keyword's
-    // hint blocks are consumed by the span-aware [[leadingHint]], then
+    // hint blocks are consumed by the lexer-based [[leadingHint]], then
     // DISTINCT ON is tested right after — also covering the no-space
     // `SELECT/*+h*/DISTINCT ON` spelling the old `SELECT\s+` missed.
     case class DonSite(selStart: Int, keysOpen: Int, hint: String)
     def donAt(selStart: Int): Option[DonSite] = {
-      val (hint, afterHint) = leadingHint(sql, selStart, spans)
+      val (hint, afterHint) = leadingHint(lx, selStart)
       "(?is)^\\s*DISTINCT\\s+ON\\s*\\(".r.findFirstMatchIn(sql.substring(afterHint))
         .map(m2 => DonSite(selStart, afterHint + m2.end - 1, hint))
     }
-    val selStarts = "(?i)\\bSELECT\\b".r.findAllMatchIn(sql)
-      .filter(mm => outsideLiterals(spans, mm.start)).map(_.start).toList
+    val selStarts = lx.codeMatches("(?i)\\bSELECT\\b".r).map(_.start).toList
     // lazy sweeps: donAt copies the statement tail, so stop at the
     // first hit instead of probing every SELECT (r17 review)
     val site = selStarts.iterator.filter(depth(_) == 0).map(donAt)
@@ -2315,7 +1922,7 @@ object Dialect {
         // statement containing the clause in place, then rescan
         val nested = selStarts.iterator.filter(depth(_) > 0).map(donAt)
           .collectFirst { case Some(d) => d }.getOrElse(return sql0)
-        val (open, close) = enclosingParen(sql, spans, nested.selStart)
+        val (open, close) = lx.enclosingParen(nested.selStart)
           .getOrElse(return sql0)
         val inner = sql.substring(open + 1, close)
         val rebuilt = rewriteDistinctOn(inner, esc, spark)
@@ -2324,14 +1931,14 @@ object Dialect {
           sql.substring(0, open + 1) + rebuilt + sql.substring(close), esc, spark)
       }
     val keysOpen = site.keysOpen
-    val keysClose = matchParen(sql, spans, keysOpen)
+    val keysClose = lx.matchParen(keysOpen)
     if (keysClose < 0)
       throw new graft.UnsupportedError(s"unbalanced DISTINCT ON ( in: $sql")
     val keys = sql.substring(keysOpen + 1, keysClose).trim
-    val fromIdx = topLevelKeyword(sql, spans, depth, "FROM", keysClose)
+    val fromIdx = lx.topLevelKeyword("FROM", keysClose)
     if (fromIdx < 0)
       throw new graft.UnsupportedError(s"cannot locate FROM after DISTINCT ON in: $sql")
-    val orderIdx = topLevelKeyword(sql, spans, depth, "ORDER", fromIdx)
+    val orderIdx = lx.topLevelKeyword("ORDER", fromIdx)
     // the statement tail starts at the first top-level LIMIT, OFFSET, or
     // FETCH after the keys (r16 — OFFSET/FETCH are Postgres-legal after
     // DISTINCT ON; before, their text was swallowed into the ORDER BY
@@ -2339,12 +1946,12 @@ object Dialect {
     // after the rewrite, where the chain's later paging rewrites (FETCH
     // → LIMIT / WITH TIES rank) pick it up.
     val tailIdx = Seq("LIMIT", "OFFSET", "FETCH")
-      .map(kw => topLevelKeyword(sql, spans, depth, kw, fromIdx))
+      .map(kw => lx.topLevelKeyword(kw, fromIdx))
       .filter(_ >= 0).sorted.headOption.getOrElse(-1)
     val bodyEnd = Seq(orderIdx, tailIdx).filter(_ >= 0).sorted.headOption.getOrElse(sql.length)
     val body = sql.substring(fromIdx, bodyEnd).trim // "FROM …"
     val items = expandStarItems(spark,
-      splitArgs(sql, spans, keysClose + 1, fromIdx).map(_.trim).filter(_.nonEmpty),
+      lx.splitArgs(keysClose + 1, fromIdx).map(_.trim).filter(_.nonEmpty),
       body, "DISTINCT ON")
     val names = items.map(itemName(_, "DISTINCT ON")).mkString(", ")
     val ord =
@@ -2535,15 +2142,15 @@ object Dialect {
     var guard = 0
     while (guard < 256) {
       guard += 1
-      val spans = literalSpans(cur, esc)
-      re.findAllMatchIn(cur).find(m => m.start >= from && outsideLiterals(spans, m.start)) match {
+      val lx = SqlLexer(cur, esc)
+      lx.codeMatches(re, from).nextOption() match {
         case None => return cur
         case Some(m) =>
           val open = m.end - 1
-          val close = matchParen(cur, spans, open)
+          val close = lx.matchParen(open)
           if (close < 0)
             throw new graft.UnsupportedError(s"unbalanced ${m.group(1)}( in: $cur")
-          val args = splitArgs(cur, spans, open + 1, close).map(_.trim)
+          val args = lx.splitArgs(open + 1, close).map(_.trim)
           transform(m.group(1), args) match {
             case Some(repl) =>
               cur = cur.substring(0, m.start) + repl + cur.substring(close + 1)
@@ -2605,15 +2212,15 @@ object Dialect {
   private def rewriteCallOnePass(sql: String, names: String, esc: Boolean = false)(
       transform: (String, Seq[String]) => String): String = {
     val re = ("(?i)\\b(" + names + ")\\s*\\(").r
-    val spans = literalSpans(sql, esc)
-    re.findAllMatchIn(sql).find(m => outsideLiterals(spans, m.start)) match {
+    val lx = SqlLexer(sql, esc)
+    lx.codeMatches(re).nextOption() match {
       case None => sql
       case Some(m) =>
         val open = m.end - 1
-        val close = matchParen(sql, spans, open)
+        val close = lx.matchParen(open)
         if (close < 0)
           throw new graft.UnsupportedError(s"unbalanced ${m.group(1)}( in: $sql")
-        val args = splitArgs(sql, spans, open + 1, close)
+        val args = lx.splitArgs(open + 1, close)
           .map(a => rewriteCallOnePass(a, names, esc)(transform)).map(_.trim)
         sql.substring(0, m.start) + transform(m.group(1), args) +
           rewriteCallOnePass(sql.substring(close + 1), names, esc)(transform)
@@ -2664,10 +2271,8 @@ object Dialect {
         throw new graft.UnsupportedError(
           s"$fn with multiple expressions is not supported; use CONCAT_WS inside it")
       val arg = args.head
-      val spans = literalSpans(arg, backslashEscapes = true)
-      val depth = depthAt(arg, spans)
-      def find(re: String): Option[scala.util.matching.Regex.Match] =
-        re.r.findAllMatchIn(arg).find(m => depth(m.start) == 0 && outsideLiterals(spans, m.start))
+      val lx = SqlLexer(arg, backslashEscapes = true)
+      def find(re: String) = lx.topLevelMatch(re.r)
       val sepM = find("""(?i)\bSEPARATOR\b""")
       val ordM = find("""(?i)\bORDER\s+BY\b""")
       val sep = sepM match {
@@ -2693,19 +2298,8 @@ object Dialect {
     * unambiguous at any nesting depth.
     */
   private[graft] def rewriteMysqlLimit(sql: String): String = {
-    val spans = literalSpans(sql, backslashEscapes = true)
-    val re = """(?i)\bLIMIT\s+(\d+)\s*,\s*(\d+)""".r
-    val out = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(sql).foreach { m =>
-      if (outsideLiterals(spans, m.start)) {
-        out.append(sql.substring(last, m.start))
-          .append("LIMIT ").append(m.group(2)).append(" OFFSET ").append(m.group(1))
-        last = m.end
-      }
-    }
-    out.append(sql.substring(last))
-    out.toString
+    replaceInCode(sql, """(?i)\bLIMIT\s+(\d+)\s*,\s*(\d+)""".r, esc = true, blank = true)(
+      m => s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}")
   }
 
   /** MySQL `LOCATE(substr, str)` → Spark `instr(str, substr)` (swapped
@@ -2797,8 +2391,10 @@ object Dialect {
     var changed = true
     while (changed) {
       changed = false
-      val spans = literalSpans(cur, backslashEscapes = true)
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)).foreach { m =>
+      // comment-blanked scan: a comment between GLOB and its pattern
+      // must not hide the operator
+      val lx = SqlLexer(blankComments(cur, backslashEscapes = true), backslashEscapes = true)
+      lx.codeMatches(re).nextOption().foreach { m =>
         val pat = m.group(1).replace("\\\\", "\\").replace("''", "'")
         val rx = new StringBuilder("^")
         pat.foreach {
@@ -2916,37 +2512,23 @@ object Dialect {
     * return differently-ordered rows.
     */
   private[graft] def rewriteOracleRownum(sql: String): String = {
-    val spans = literalSpans(sql, backslashEscapes = true)
+    // scanned comment-blanked: a comment between the tail's tokens must
+    // not hide it (the splice drops the comments inside the tail)
+    val blanked = blankComments(sql, backslashEscapes = true)
+    val lx = SqlLexer(blanked, backslashEscapes = true)
     val tail = """(?i)\bWHERE\s+ROWNUM\s*(<=|<)\s*(\d+)\s*$""".r
-    tail.findFirstMatchIn(sql).filter(m => outsideLiterals(spans, m.start)) match {
+    tail.findFirstMatchIn(blanked).filter(m => lx.isCode(m.start)) match {
       case Some(m) =>
         val n = m.group(2).toLong
         sql.substring(0, m.start) + s"LIMIT ${if (m.group(1) == "<") n - 1 else n}"
       case None =>
-        """(?i)\bROWNUM\b""".r.findAllMatchIn(sql)
-          .find(m => outsideLiterals(spans, m.start)).foreach { _ =>
-            throw new graft.UnsupportedError(
-              "ROWNUM is only supported as a trailing 'WHERE ROWNUM <= n'; " +
-                "use ORDER BY ... LIMIT for top-k")
-          }
+        lx.codeMatches("""(?i)\bROWNUM\b""".r).nextOption().foreach { _ =>
+          throw new graft.UnsupportedError(
+            "ROWNUM is only supported as a trailing 'WHERE ROWNUM <= n'; " +
+              "use ORDER BY ... LIMIT for top-k")
+        }
         sql
     }
-  }
-
-  /** Whole-word, literal-span-aware keyword replacement (`MINUS` →
-    * `EXCEPT`, `SYSDATE` → `current_timestamp()`).
-    */
-  private[graft] def rewriteWord(sql: String, from: String, to: String): String = {
-    val spans = literalSpans(sql, backslashEscapes = true)
-    val re = ("(?i)\\b" + from + "\\b").r
-    val out = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(sql).filter(m => outsideLiterals(spans, m.start)).foreach { m =>
-      out.append(sql.substring(last, m.start)).append(to)
-      last = m.end
-    }
-    out.append(sql.substring(last))
-    out.toString
   }
 
   // ---- T-SQL-ish helpers --------------------------------------------------
@@ -2972,21 +2554,10 @@ object Dialect {
 
   /** `[bracket]` identifiers → backtick identifiers (T-SQL's quoting;
     * brackets cannot nest and `]` cannot appear inside, so a flat scan is
-    * exact). Literal spans untouched.
+    * exact). Only brackets opening in code are rewritten.
     */
-  private[graft] def rewriteBracketIdents(sql: String): String = {
-    val spans = literalSpans(sql, backslashEscapes = true)
-    val re = """\[([^\[\]]+)\]""".r
-    val out = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(sql).filter(m => outsideLiterals(spans, m.start)).foreach { m =>
-      out.append(sql.substring(last, m.start))
-        .append('`').append(m.group(1)).append('`')
-      last = m.end
-    }
-    out.append(sql.substring(last))
-    out.toString
-  }
+  private[graft] def rewriteBracketIdents(sql: String): String =
+    replaceInCode(sql, """\[([^\[\]]+)\]""".r, esc = true)(m => s"`${m.group(1)}`")
 
   /** `SELECT TOP n …` / `SELECT TOP (n) …` → `SELECT … LIMIT n`, with the
     * LIMIT inserted at the END of that SELECT's scope: the first `)` that
@@ -3088,11 +2659,10 @@ object Dialect {
       // a paren or keyword inside a preserved hint cannot skew the scope
       // scan either.
       val blanked = blankComments(cur, backslashEscapes = true)
-      val spans = opaqueSpans(blanked, backslashEscapes = true)._1
-      val siteOpt = selRe.findAllMatchIn(blanked)
-        .filter(sm => outsideLiterals(spans, sm.start))
+      val lx = SqlLexer(blanked, backslashEscapes = true)
+      val siteOpt = lx.codeMatches(selRe)
         .flatMap { sm =>
-          val (_, afterHint) = leadingHint(blanked, sm.start, spans)
+          val (_, afterHint) = leadingHint(lx, sm.start)
           topTail.findFirstMatchIn(blanked.substring(afterHint)).map { tm =>
             TopSite(sm.start, afterHint + tm.end,
               if (tm.group(1) != null) "DISTINCT " else "",
@@ -3124,10 +2694,7 @@ object Dialect {
         // silently LIMIT the combined result Spark's own MINUS synonym
         // executes (r19 second review) — named error instead
         if (!minusIsSetOp) {
-          val dmap = depthAt(blanked, spans)
-          "(?is)\\bMINUS\\s+(?:(?:ALL|DISTINCT)\\s+)?(?:SELECT\\b|\\()".r
-            .findAllMatchIn(blanked)
-            .find(mm => outsideLiterals(spans, mm.start) && dmap(mm.start) == 0)
+          lx.topLevelMatch("(?is)\\bMINUS\\s+(?:(?:ALL|DISTINCT)\\s+)?(?:SELECT\\b|\\()".r)
             .foreach(_ => throw new graft.UnsupportedError(
               "MINUS as a set operation is not supported on this " +
                 "dialect's chain (spell it EXCEPT) — a TOP cannot be " +
@@ -3140,7 +2707,7 @@ object Dialect {
         var scopeEnd = blanked.length
         var found = false
         while (i < blanked.length && !found) {
-          if (!outsideLiterals(spans, i)) i += 1
+          if (!lx.isCode(i)) i += 1
           else {
             val c = blanked.charAt(i)
             if (c == '(') { depth += 1; i += 1 }
@@ -3180,10 +2747,8 @@ object Dialect {
         // that region are display-only (inner SELECT-adjacent hints are
         // hint-preserved by the blanking).
         val armBlank = blanked.substring(m.end, scopeEnd)
-        lazy val armOrderIdx = {
-          val aSpans = literalSpans(armBlank, backslashEscapes = true)
-          topLevelKeyword(armBlank, aSpans, depthAt(armBlank, aSpans), "ORDER")
-        }
+        lazy val armOrderIdx =
+          SqlLexer(armBlank, backslashEscapes = true).topLevelKeyword("ORDER")
         // an optimizer hint directly after `TOP n` (`SELECT TOP 100 /*+
         // BROADCAST(d) */ …`) is honored by the SOURCE engines and lands
         // SELECT-adjacent in the rewritten statement — but blankComments
@@ -3196,10 +2761,9 @@ object Dialect {
         // greedy whitespace runs straight through the blanked hint bytes,
         // so m.end is already past it — collect the original hint spans
         // lying within [m.start, m.end)
-        val armHint = opaqueSpanKinds(cur, backslashEscapes = true)
-          .collect { case (a, b, true) if a >= m.start && b <= m.end &&
-              b - a >= 3 && cur.charAt(a + 1) == '*' && cur.charAt(a + 2) == '+' =>
-            cur.substring(a, b) + " "
+        val armHint = SqlLexer(cur, backslashEscapes = true).spans
+          .collect { case sp if sp.kind == SqlLexer.Hint && sp.start >= m.start && sp.end <= m.end =>
+            cur.substring(sp.start, sp.end) + " "
           }.mkString
         val replacement =
           if ((isPercent || isTies) && isArm) {
@@ -3397,22 +2961,12 @@ object Dialect {
   private[graft] def rewriteTsqlOffsetFetch(sql: String): String = {
     val re = ("""(?i)\bOFFSET\s+(\d+)\s+ROWS?""" +
       """(?:\s+FETCH\s+(?:NEXT|FIRST)\s+(\d+)\s+ROWS?\s+ONLY)?""").r
-    // comment-blanked scan / original splice, like [[rewriteFetchFirst]]
-    // (r18 review): an OFFSET…FETCH inside a comment must not splice,
-    // and a comment between the clause's tokens must not hide it
-    val blanked = blankComments(sql, backslashEscapes = true)
-    val spans = literalSpans(blanked, backslashEscapes = true)
-    val out = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(blanked).filter(m => outsideLiterals(spans, m.start)).foreach { m =>
-      val repl =
-        if (m.group(2) != null) s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}"
-        else s"OFFSET ${m.group(1)}"
-      out.append(sql.substring(last, m.start)).append(repl)
-      last = m.end
+    // an OFFSET…FETCH inside a comment must not splice, and a comment
+    // between the clause's tokens must not hide it
+    replaceInCode(sql, re, esc = true, blank = true) { m =>
+      if (m.group(2) != null) s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}"
+      else s"OFFSET ${m.group(1)}"
     }
-    out.append(sql.substring(last))
-    out.toString
   }
 
   /** T-SQL `DATEPART(part, expr)` → the matching Spark extraction
@@ -3434,21 +2988,11 @@ object Dialect {
 
   /** Postgres regex-match operators: ` ~ ` → ` RLIKE `, ` !~ ` →
     * ` NOT RLIKE ` (whitespace-delimited binary form only — a unary `~`
-    * is Spark's bitwise NOT and is left alone; literal spans untouched).
+    * is Spark's bitwise NOT and is left alone; only code is rewritten).
     */
-  private[graft] def rewritePgRegexMatch(sql: String): String = {
-    val spans = literalSpans(sql, backslashEscapes = true)
-    val re = """(?<=\s)(!~|~)(?=\s)""".r
-    val out = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(sql).filter(m => outsideLiterals(spans, m.start)).foreach { m =>
-      out.append(sql.substring(last, m.start))
-      out.append(if (m.group(1) == "!~") "NOT RLIKE" else "RLIKE")
-      last = m.end
-    }
-    out.append(sql.substring(last))
-    out.toString
-  }
+  private[graft] def rewritePgRegexMatch(sql: String): String =
+    replaceInCode(sql, """(?<=\s)(!~|~)(?=\s)""".r, esc = true)(
+      m => if (m.group(1) == "!~") "NOT RLIKE" else "RLIKE")
 
   /** Postgres EXTRACT fields that differ from Spark's same-named ones:
     * `EPOCH` → `unix_timestamp(x)` (second precision — the integral
@@ -3489,9 +3033,8 @@ object Dialect {
         // everything after the expression before locating the clause
         case x +: restParts if restParts.nonEmpty =>
           val rest = restParts.mkString(", ")
-          val spans = literalSpans(rest, backslashEscapes = true)
-          """(?i)\bORDER\s+BY\b""".r.findAllMatchIn(rest)
-            .find(m => outsideLiterals(spans, m.start))
+          SqlLexer(rest, backslashEscapes = true)
+            .codeMatches("""(?i)\bORDER\s+BY\b""".r).nextOption()
             .map { m =>
               val sep = rest.substring(0, m.start).trim
               val ord = rest.substring(m.end).trim
@@ -3556,7 +3099,7 @@ object Dialect {
     "(?is)^(\\s*OVER\\b\\s*)".r.findFirstMatchIn(after).map { om =>
       val p = om.end
       if (p < after.length && after.charAt(p) == '(') {
-        val oc = matchParen(after, literalSpans(after, esc), p)
+        val oc = SqlLexer(after, esc).matchParen(p)
         if (oc < 0)
           throw new graft.UnsupportedError(s"unbalanced OVER ( in: $context")
         (after.substring(p, oc + 1), oc + 1)
@@ -3590,24 +3133,21 @@ object Dialect {
     var guard = 0
     while (guard < 256) {
       guard += 1
-      val spans = literalSpans(cur, backslashEscapes = true)
-      re.findAllMatchIn(cur)
-        .find(m => m.start >= from && outsideLiterals(spans, m.start)) match {
+      val lx = SqlLexer(cur, backslashEscapes = true)
+      lx.codeMatches(re, from).nextOption() match {
         case None => return cur
         case Some(m) =>
           val open = m.end - 1
-          val close = matchParen(cur, spans, open)
+          val close = lx.matchParen(open)
           if (close < 0)
             throw new graft.UnsupportedError(s"unbalanced array_agg( in: $cur")
           val arg = cur.substring(open + 1, close).trim
-          val aSpans = literalSpans(arg, backslashEscapes = true)
-          val aDepth = depthAt(arg, aSpans)
-          val hasOrder = "(?i)\\bORDER\\s+BY\\b".r.findAllMatchIn(arg)
-            .exists(mm => aDepth(mm.start) == 0 && outsideLiterals(aSpans, mm.start))
+          val aLx = SqlLexer(arg, backslashEscapes = true)
+          val hasOrder = aLx.topLevelMatch("(?i)\\bORDER\\s+BY\\b".r).isDefined
           val marked = arg.contains("'__f'") ||
             "(?i)\\braise_error\\s*\\(".r.findFirstIn(arg).isDefined
           if (hasOrder || marked || arg.isEmpty ||
-              splitArgs(arg, aSpans, 0, arg.length).length != 1) {
+              aLx.splitArgs(0, arg.length).length != 1) {
             // advance past only the FUNCTION NAME, not the whole call: a
             // bare array_agg nested inside a declined call's argument
             // (e.g. in a scalar-subquery argument) must still be visited,
@@ -3668,23 +3208,21 @@ object Dialect {
       descNullsLast: Boolean, ascNullsFirst: Boolean,
       skipNullValues: Boolean,
       valueWrap: String => String = identity): Option[String] = {
-      val spans = literalSpans(joined, backslashEscapes = true)
-      val depth = depthAt(joined, spans)
-      """(?i)\bORDER\s+BY\b""".r.findAllMatchIn(joined)
-        .find(m => depth(m.start) == 0 && outsideLiterals(spans, m.start))
+      SqlLexer(joined, backslashEscapes = true)
+        .topLevelMatch("""(?i)\bORDER\s+BY\b""".r)
         .map { m =>
           val x0 = joined.substring(0, m.start).trim
           val ordAll = joined.substring(m.end).trim
           val (isDistinct, x) =
             "(?is)^DISTINCT\\s+(.*)$".r.findFirstMatchIn(x0)
               .map(mm => (true, mm.group(1).trim)).getOrElse((false, x0))
-          val xSpans = literalSpans(x, backslashEscapes = true)
-          if (x.isEmpty || splitArgs(x, xSpans, 0, x.length).length != 1)
+          val xLx = SqlLexer(x, backslashEscapes = true)
+          if (x.isEmpty || xLx.splitArgs(0, x.length).length != 1)
             throw new graft.UnsupportedError(
               s"$fn takes exactly one aggregated expression, got: $x")
-          val oSpans = literalSpans(ordAll, backslashEscapes = true)
+          val oLx = SqlLexer(ordAll, backslashEscapes = true)
           // per key: `expr [ASC|DESC] [NULLS FIRST|LAST]`
-          val keys = splitArgs(ordAll, oSpans, 0, ordAll.length).map(_.trim).map { k0 =>
+          val keys = oLx.splitArgs(0, ordAll.length).map(_.trim).map { k0 =>
             val explicitNullsLast =
               "(?is)\\bNULLS\\s+(FIRST|LAST)\\s*$".r.findFirstMatchIn(k0)
                 .map(_.group(1).equalsIgnoreCase("LAST"))
@@ -3783,18 +3321,12 @@ object Dialect {
   private[graft] def rewriteBqArrayAgg(sql: String): String =
     rewriteCallOpt(sql, "array_agg", esc = true) { (fn, args) =>
       val joined = args.mkString(", ").trim
-      val spans = literalSpans(joined, backslashEscapes = true)
-      val depth = depthAt(joined, spans)
-      def topLevel(re: String): Option[scala.util.matching.Regex.Match] =
-        re.r.findAllMatchIn(joined)
-          .find(m => depth(m.start) == 0 && outsideLiterals(spans, m.start))
+      val lx = SqlLexer(joined, backslashEscapes = true)
+      def topLevel(re: String) = lx.topLevelMatch(re.r)
       val limitM = topLevel("(?i)\\bLIMIT\\s+(\\d+)\\s*$")
       val core0 = limitM.map(m => joined.substring(0, m.start)).getOrElse(joined).trim
-      val cSpans = literalSpans(core0, backslashEscapes = true)
-      val cDepth = depthAt(core0, cSpans)
-      def inCore(re: String): Option[scala.util.matching.Regex.Match] =
-        re.r.findAllMatchIn(core0)
-          .find(m => cDepth(m.start) == 0 && outsideLiterals(cSpans, m.start))
+      val cLx = SqlLexer(core0, backslashEscapes = true)
+      def inCore(re: String) = cLx.topLevelMatch(re.r)
       val ign = inCore("(?i)\\bIGNORE\\s+NULLS\\b")
       ign match {
         case None =>
@@ -3869,22 +3401,21 @@ object Dialect {
     var guard = 0
     while (guard < 256) {
       guard += 1
-      val spans = literalSpans(cur, backslashEscapes = true)
-      re.findAllMatchIn(cur)
-        .find(m => m.start >= from && outsideLiterals(spans, m.start)) match {
+      val lx = SqlLexer(cur, backslashEscapes = true)
+      lx.codeMatches(re, from).nextOption() match {
         case None => return cur
         case Some(m) =>
           val open = m.end - 1
-          val close = matchParen(cur, spans, open)
+          val close = lx.matchParen(open)
           if (close < 0)
             throw new graft.UnsupportedError(s"unbalanced array_agg( in: $cur")
           val after = cur.substring(close + 1)
           "(?is)^\\s*WITHIN\\s+GROUP\\s*\\(".r.findFirstMatchIn(after) match {
             case None => from = close + 1
             case Some(w) =>
-              val aSpans = literalSpans(after, backslashEscapes = true)
+              val aLx = SqlLexer(after, backslashEscapes = true)
               val wOpen = w.end - 1
-              val wClose = matchParen(after, aSpans, wOpen)
+              val wClose = aLx.matchParen(wOpen)
               if (wClose < 0)
                 throw new graft.UnsupportedError(s"unbalanced WITHIN GROUP ( in: $cur")
               val body = after.substring(wOpen + 1, wClose).trim
@@ -3979,13 +3510,12 @@ object Dialect {
       guard += 1
       if (guard > 256)
         throw new graft.UnsupportedError("FILTER rewrite did not terminate")
-      val spans = literalSpans(cur, esc)
-      re.findAllMatchIn(cur)
-        .find(m => outsideLiterals(spans, m.start) && outsideLiterals(spans, m.end - 1))
+      val lx = SqlLexer(cur, esc)
+      lx.codeMatches(re).find(m => lx.isCode(m.end - 1))
         .foreach { m =>
           val aggClose = m.start // the aggregate call's ')'
           val filtOpen = m.end - 1 // the '(' after FILTER
-          val filtClose = matchParen(cur, spans, filtOpen)
+          val filtClose = lx.matchParen(filtOpen)
           if (filtClose < 0)
             throw new graft.UnsupportedError(s"unbalanced FILTER ( in: $cur")
           val cond = cur.substring(filtOpen + 1, filtClose).trim match {
@@ -3993,20 +3523,9 @@ object Dialect {
             case other => throw new graft.UnsupportedError(
               s"FILTER requires (WHERE <condition>), got: ($other)")
           }
-          // locate the aggregate call's '(' by a depth-counting backward scan
-          var depth = 0
-          var i = aggClose
-          var aggOpen = -1
-          while (i >= 0 && aggOpen < 0) {
-            if (outsideLiterals(spans, i)) {
-              val c = cur.charAt(i)
-              if (c == ')') depth += 1
-              else if (c == '(') { depth -= 1; if (depth == 0) aggOpen = i }
-            }
-            i -= 1
-          }
-          if (aggOpen < 0)
-            throw new graft.UnsupportedError(s"unbalanced ) before FILTER in: $cur")
+          // the aggregate call's '(' — the opener of the pair `)` closes
+          val aggOpen = lx.enclosingParen(aggClose).map(_._1).getOrElse(
+            throw new graft.UnsupportedError(s"unbalanced ) before FILTER in: $cur"))
           var e = aggOpen
           while (e > 0 && Character.isWhitespace(cur.charAt(e - 1))) e -= 1
           var b = e
@@ -4015,7 +3534,7 @@ object Dialect {
           if (fn.isEmpty)
             throw new graft.UnsupportedError(
               "FILTER must follow an aggregate function call")
-          val args = splitArgs(cur, spans, aggOpen + 1, aggClose).map(_.trim)
+          val args = lx.splitArgs(aggOpen + 1, aggClose).map(_.trim)
           // the replaced span normally ends at the FILTER clause's ')';
           // the windowed-collect branch extends it over the OVER spec
           var spanEnd = filtClose + 1
@@ -4044,13 +3563,10 @@ object Dialect {
               // NULL elements in array_agg, so the bare CASE wrap would
               // conflate a genuine NULL element with a filtered-out row
               if (Set("array_agg", "collect_list", "collect_set").contains(f)) {
-                val aSpans = literalSpans(a, esc)
-                val aDepth = depthAt(a, aSpans)
                 // an ordered collect (`array_agg(x ORDER BY y)`, pre-rewrite)
                 // has no correct wrap at all (the downstream struct collect
                 // would surface filtered rows as NULLs) — named fail-fast
-                if ("(?i)\\bORDER\\s+BY\\b".r.findAllMatchIn(a)
-                    .exists(mm => aDepth(mm.start) == 0 && outsideLiterals(aSpans, mm.start)))
+                if (SqlLexer(a, esc).topLevelMatch("(?i)\\bORDER\\s+BY\\b".r).isDefined)
                   throw new graft.UnsupportedError(
                     s"FILTER on an inline-ORDER-BY $f is outside the shimmed " +
                       "surface (the CASE wrap would inject the filtered rows " +
@@ -4569,9 +4085,9 @@ object Dialect {
       replaceRe.findFirstMatchIn(it) match {
         case Some(rm) =>
           val q = Option(rm.group(1))
-          val itSpans = literalSpans(it, backslashEscapes = true)
+          val itLx = SqlLexer(it, backslashEscapes = true)
           val open = rm.end - 1
-          val close = matchParen(it, itSpans, open)
+          val close = itLx.matchParen(open)
           // trailing text AFTER the REPLACE list (a REPLACE-then-EXCLUDE
           // combo — an order DuckDB's grammar rejects too — or a second
           // clause) keeps a named error; the EXCLUDE-then-REPLACE combo
@@ -4580,7 +4096,7 @@ object Dialect {
             throw new graft.UnsupportedError(
               s"$construct cannot expand this star REPLACE form: $it")
           val repls =
-            parseReplaceItems(it, itSpans, open, close, s"$construct star REPLACE")
+            parseReplaceItems(itLx, open, close, s"$construct star REPLACE")
           val excludes = parseStarExcludes(Option(rm.group(2)), Option(rm.group(3)))
           val fields = starFields(q.map(_ + ".*").getOrElse("*"))
           val known = fields.map(_.toLowerCase).toSet
@@ -4740,8 +4256,8 @@ object Dialect {
     * Returns None for an unresolvable key; the caller raises its own
     * named error.
     */
-  /** Literal-span-aware expression-text normalization (r18 sixth
-    * review): whitespace and case are FORMATTING outside literals and
+  /** Lexer-aware expression-text normalization: whitespace and case
+    * are FORMATTING outside literals and
     * quoted identifiers but CONTENT inside them — a plain regex
     * collapse conflated expression texts differing only inside a
     * string literal or an embedded quoted name. Because quoted-span
@@ -4752,15 +4268,14 @@ object Dialect {
     * start and end with a quoted identifier).
     */
   private def normalizeExprText(x: String): String = {
-    val sp = literalAndIdentSpans(x, backslashEscapes = true)
+    val lx = SqlLexer(x, backslashEscapes = true)
     val sb = new StringBuilder
     var i = 0
     while (i < x.length) {
-      if (outsideLiterals(sp, i) && x.charAt(i).isWhitespace) {
+      if (lx.isCode(i) && x.charAt(i).isWhitespace) {
         sb.append(' ')
-        while (i < x.length && outsideLiterals(sp, i) &&
-          x.charAt(i).isWhitespace) i += 1
-      } else if (outsideLiterals(sp, i)) {
+        while (i < x.length && lx.isCode(i) && x.charAt(i).isWhitespace) i += 1
+      } else if (lx.isCode(i)) {
         sb.append(Character.toLowerCase(x.charAt(i))); i += 1
       } else { sb.append(x.charAt(i)); i += 1 }
     }
@@ -4842,8 +4357,8 @@ object Dialect {
     // opaque (not literal-only) spans: optimizer hints survive the
     // blanking, and a comma or paren inside `/*+ REPARTITION(3, c) */`
     // must not split select items or skew the depth map
-    val spans = opaqueSpans(sql, backslashEscapes = true)._1
-    val depth = depthAt(sql, spans)
+    val lx = SqlLexer(sql, backslashEscapes = true)
+    val depth = lx.depth
     // set-operation detection runs BEFORE the single-SELECT shape check:
     // a parenthesized first arm — `(SELECT …) UNION (SELECT …) ORDER BY
     // …` — has no top-level SELECT at position 0. The match requires the
@@ -4860,8 +4375,7 @@ object Dialect {
       val armRe = ("(?is)\\b" + k +
         "\\s+(?:(?:ALL|DISTINCT)\\s+)?" +
         "(?:SELECT\\b|VALUES\\b|TABLE\\b|WITH\\b|(?:\\(\\s*)+(?:SELECT|VALUES|TABLE|WITH)\\b)").r
-      armRe.findAllMatchIn(sql).exists(mm =>
-        depth(mm.start) == 0 && outsideLiterals(spans, mm.start))
+      lx.topLevelMatch(armRe).isDefined
     }
     if (setOpHit) {
       /* WITH TIES / PERCENT over a set operation (r17 — a named
@@ -4888,7 +4402,7 @@ object Dialect {
       val s = spark.getOrElse(throw new graft.UnsupportedError(
         s"$construct over a set operation needs registered tables to " +
           "resolve the arms' output names"))
-      val orderIdx0 = topLevelKeyword(sql, spans, depth, "ORDER")
+      val orderIdx0 = lx.topLevelKeyword("ORDER")
       if (orderIdx0 < 0 || orderIdx0 > ordEnd)
         throw new graft.UnsupportedError(
           s"$construct over a set operation requires a trailing ORDER BY")
@@ -4915,8 +4429,8 @@ object Dialect {
       val byName = names.map(nm => nm.toLowerCase -> nm).toMap
       val ordText = sql.substring(orderIdx0 + "ORDER".length, ordEnd).trim
         .replaceAll("(?i)^BY\\s+", "")
-      val oSpans = literalSpans(ordText, backslashEscapes = true)
-      val resolved = splitArgs(ordText, oSpans, 0, ordText.length)
+      val oLx = SqlLexer(ordText, backslashEscapes = true)
+      val resolved = oLx.splitArgs(0, ordText.length)
         .map(_.trim).map { part =>
           val (e, sfx) = splitSortSuffix(part)
           // a QUOTED output name is legal Postgres over a set operation:
@@ -4943,9 +4457,9 @@ object Dialect {
         rebuilt.length, nullsLargest, percent, ties, construct, offset, spark,
         nullsAlwaysLast, qualifyIsClause = qualifyIsClause)
     }
-    val selIdx = topLevelKeyword(sql, spans, depth, "SELECT")
-    val fromIdx = topLevelKeyword(sql, spans, depth, "FROM")
-    val orderIdx = topLevelKeyword(sql, spans, depth, "ORDER")
+    val selIdx = lx.topLevelKeyword("SELECT")
+    val fromIdx = lx.topLevelKeyword("FROM")
+    val orderIdx = lx.topLevelKeyword("ORDER")
     if (selIdx != 0 || fromIdx < 0 || orderIdx < 0 || orderIdx > ordEnd ||
         fromIdx > orderIdx)
       throw new graft.UnsupportedError(
@@ -4960,7 +4474,7 @@ object Dialect {
     // ranks a `( SELECT DISTINCT … )` subquery whose window sort keys
     // resolve to its OUTPUT NAMES. DISTINCT ON never reaches here (its
     // rewrite runs earlier in every wired chain) — named error if it does.
-    val (hint, isDistinct, itemsStart) = hintAndDistinct(sql, selIdx, spans,
+    val (hint, isDistinct, itemsStart) = hintAndDistinct(lx, selIdx,
       s"$construct under SELECT DISTINCT ON is not supported (rewrite DISTINCT ON first)")
     if (sql.substring(tiesEnd).trim.nonEmpty)
       throw new graft.UnsupportedError(
@@ -4995,25 +4509,13 @@ object Dialect {
     // and dies loudly in Spark's parser). T-SQL TOP keeps the guard:
     // its chain classifies the word so a clause-position QUALIFY gets
     // the named error rather than a raw parse error.
-    // `spans` is already the opaque-span vector of the blanked text —
-    // no second lex needed (r17 review)
-    val qSpans = spans
-    val clauseQualify = "(?i)\\bQUALIFY\\b".r.findAllMatchIn(sql)
-      .filter(_ => qualifyIsClause)
-      .filter(m => depth(m.start) == 0 && outsideLiterals(qSpans, m.start))
+    val clauseQualify = lx.codeMatches("(?i)\\bQUALIFY\\b".r)
+      .filter(m => qualifyIsClause && depth(m.start) == 0)
       .flatMap { m =>
         // previous token, skipping whitespace AND opaque spans (a
-        // comment's own `*/` or `--` characters are not operators —
-        // r16 fourth review)
+        // comment's own `*/` or `--` characters are not operators)
         var j = m.start - 1
-        var moved = true
-        while (moved) {
-          moved = false
-          while (j >= 0 && Character.isWhitespace(sql.charAt(j))) { j -= 1; moved = true }
-          qSpans.find { case (a, b) => j >= a && j < b }.foreach { case (a, _) =>
-            j = a - 1; moved = true
-          }
-        }
+        while (j >= 0 && (Character.isWhitespace(sql.charAt(j)) || !lx.isCode(j))) j -= 1
         var b0 = j + 1
         while (b0 > 0 && (Character.isLetterOrDigit(sql.charAt(b0 - 1)) ||
             sql.charAt(b0 - 1) == '_')) b0 -= 1
@@ -5054,7 +4556,7 @@ object Dialect {
     }
     val body = sql.substring(fromIdx, orderIdx).trim
     val items = expandStarItems(spark,
-      splitArgs(sql, spans, itemsStart, fromIdx)
+      lx.splitArgs(itemsStart, fromIdx)
         .map(_.trim).filter(_.nonEmpty),
       body, construct)
     val names = items.map(itemName(_, construct)).mkString(", ")
@@ -5070,8 +4572,8 @@ object Dialect {
     // per sort key: [alias-resolve] then pin the dialect's default null
     // placement when none is spelled (Spark would otherwise flip it)
     def keyParts(o: String, resolveAliases: Boolean): Seq[String] = {
-      val oSpans = literalSpans(o, backslashEscapes = true)
-      splitArgs(o, oSpans, 0, o.length).map(_.trim).map { part0 =>
+      val oLx = SqlLexer(o, backslashEscapes = true)
+      oLx.splitArgs(0, o.length).map(_.trim).map { part0 =>
         val part =
           if (!resolveAliases) part0
           else "(?s)^([A-Za-z_][A-Za-z0-9_]*)(.*)$".r.findFirstMatchIn(part0) match {
@@ -5212,8 +4714,8 @@ object Dialect {
       // BY expressions must appear in the select list").
       val itemNames = items.map(itemName(_, construct))
       val resolveKey = distinctKeyResolver(items, itemNames, construct)
-      val oSpans = literalSpans(ord, backslashEscapes = true)
-      val dKeyParts = splitArgs(ord, oSpans, 0, ord.length).map(_.trim).map { part =>
+      val oLx = SqlLexer(ord, backslashEscapes = true)
+      val dKeyParts = oLx.splitArgs(0, ord.length).map(_.trim).map { part =>
         val (e, sfx) = splitSortSuffix(part)
         val resolved =
           if (e.matches("\\d+")) {
@@ -5358,6 +4860,8 @@ object Dialect {
   }
 
 
+  private val OrderWord = "(?i)\\border\\b".r
+
   /** Pin the dialect's DEFAULT null placement into sort keys wherever
     * the placement decides row MEMBERSHIP, not just display order —
     * Spark's default (nulls smallest: first-on-ASC/last-on-DESC) is the
@@ -5387,46 +4891,26 @@ object Dialect {
     */
   private[graft] def pinSortNulls(sql: String, alwaysLast: Boolean = false,
       esc: Boolean = false): String = {
-    // OPAQUE spans — the regions where no clause keyword, paren, or
-    // ORDER BY can live: string literals + quoted identifiers
-    // ([[literalAndIdentSpans]]: a backticked column named `limit` or
-    // `a--b` is neither a keyword nor a comment — r16 second/third
-    // reviews) + SQL comments (`-- …\n`, `/* … */`): an ORDER BY or
-    // LIMIT spelled inside a COMMENT is text, not a clause (the third
-    // review's confirmed repro: a comment mentioning ORDER BY before a
-    // real LIMIT swallowed the LIMIT into the comment).
-    def opaque(s: String): Vector[(Int, Int)] = opaqueSpans(s, esc)._1
+    // no clause keyword, paren or ORDER BY lives outside code: a
+    // backticked column named `limit` or `a--b` is neither a keyword nor
+    // a comment, and an ORDER BY or LIMIT spelled inside a comment is
+    // text, not a clause.
     def pinKeys(keysText0: String): Option[String] = {
       // a COMMENT inside the key region would swallow the appended pin
       // (and, trim-joined onto one line, the clause after it — a silent
-      // dropped LIMIT, r16 second review). r16 DECLINED such sites —
-      // which silently reverted them to Spark's null polarity, the very
-      // class this pin exists to kill (r16 verdict "what's wrong" 1) —
-      // r17 instead normalizes the comment spans to whitespace and pins
-      // normally: the comment is display text, never key semantics. The
-      // blank leaves a same-length whitespace hole mid-key (`s /* c */
-      // DESC` → `s    …    DESC`), so runs are collapsed to one space —
-      // but only OUTSIDE literal/quoted-identifier spans, where the
-      // bytes are content.
+      // dropped LIMIT); declining such sites would silently revert them
+      // to Spark's null polarity. So comments are blanked and the key
+      // pinned normally: the comment is display text, never key
+      // semantics. The blank leaves a same-length whitespace hole
+      // mid-key (`s /* c */ DESC` → `s    …    DESC`), so runs are
+      // collapsed to one space — in code only, where bytes are not
+      // content.
       val keysText = {
         val blanked = blankComments(keysText0, esc)
         if (blanked == keysText0) keysText0
-        else {
-          val sp = opaqueSpans(blanked, esc)._1
-          val out = new StringBuilder
-          var i = 0
-          while (i < blanked.length) {
-            if (blanked.charAt(i).isWhitespace && outsideLiterals(sp, i)) {
-              out.append(' ')
-              while (i < blanked.length && blanked.charAt(i).isWhitespace &&
-                outsideLiterals(sp, i)) i += 1
-            } else { out.append(blanked.charAt(i)); i += 1 }
-          }
-          out.toString
-        }
+        else collapseSpaces(blanked, esc)
       }
-      val (kSpans, _) = opaqueSpans(keysText, esc)
-      val parts = splitArgs(keysText, kSpans, 0, keysText.length)
+      val parts = SqlLexer(keysText, esc).splitArgs(0, keysText.length)
       if (parts.exists(_.trim.isEmpty)) return None // malformed — leave loud
       Some(parts.map(_.trim).map { part =>
         if ("(?is)\\bNULLS\\s+(FIRST|LAST)\\s*$".r.findFirstIn(part).isDefined) part
@@ -5436,16 +4920,18 @@ object Dialect {
       }.mkString(", "))
     }
     def process(s: String, isWindowSpec: Boolean): String = {
+      // only an ORDER BY site changes text: skip scopes without the word
+      if (OrderWord.findFirstIn(s).isEmpty) return s
       var cur = s
       // recurse into this scope's paren groups, back to front so the
       // recorded indices stay valid through the splices
-      val spans0 = opaque(cur)
-      val depth0 = depthAt(cur, spans0)
+      val lx0 = SqlLexer(cur, esc)
+      val depth0 = lx0.depth
       val groups = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Boolean)]
       var i = 0
       while (i < cur.length) {
-        if (cur.charAt(i) == '(' && outsideLiterals(spans0, i) && depth0(i) == 0) {
-          val close = matchParen(cur, spans0, i)
+        if (cur.charAt(i) == '(' && lx0.isCode(i) && depth0(i) == 0) {
+          val close = lx0.matchParen(i)
           if (close > i) {
             var j = i - 1
             while (j >= 0 && Character.isWhitespace(cur.charAt(j))) j -= 1
@@ -5477,19 +4963,15 @@ object Dialect {
       // front (a site's start index stays valid because every earlier
       // splice happened at a later position); spans/depth are
       // recomputed per splice since the tail text has changed
-      val spans1 = opaque(cur)
-      val depth1 = depthAt(cur, spans1)
-      val sites = "(?is)\\bORDER\\s+BY\\b".r.findAllMatchIn(cur)
-        .filter(m => depth1(m.start) == 0 && outsideLiterals(spans1, m.start))
+      // comment-blanked scan: `ORDER /* c */ BY` is an ORDER BY too
+      val lx1 = SqlLexer(blankComments(cur, esc), esc)
+      val sites = lx1.codeMatches("(?is)\\bORDER\\s+BY\\b".r)
+        .filter(m => lx1.depth(m.start) == 0)
         .map(_.end).toList
       sites.reverseIterator.foreach { keysStart =>
-        val spans = opaque(cur)
-        val depth = depthAt(cur, spans)
+        val lx = SqlLexer(cur, esc)
         def bound(kws: Seq[String]): Int = kws
-          .map(kw => ("(?i)\\b" + kw + "\\b").r.findAllMatchIn(cur)
-            .find(m => m.start >= keysStart && depth(m.start) == 0 &&
-              outsideLiterals(spans, m.start))
-            .map(_.start).getOrElse(-1))
+          .map(kw => lx.topLevelKeyword(kw, keysStart))
           .filter(_ >= 0).sorted.headOption.getOrElse(-1)
         val keysEnd =
           if (isWindowSpec) {
@@ -5524,7 +5006,7 @@ object Dialect {
     // while the SPLICE edits the original so comments outside the
     // stripped clause survive byte-identical.
     val blanked = blankComments(sql, backslashEscapes = true)
-    val spans = opaqueSpans(sql, backslashEscapes = true)._1
+    val lx = SqlLexer(sql, backslashEscapes = true)
     val out = new StringBuilder
     var last = 0
     // the match consumes its LEADING whitespace so the splice leaves no
@@ -5535,11 +5017,11 @@ object Dialect {
     // "whitespace" was a blanked comment): then the splice starts at
     // the LIMIT token itself and the original bytes survive.
     """(?i)(\s*)\bLIMIT\s+ALL\b""".r.findAllMatchIn(blanked)
-      .filter(m => outsideLiterals(spans, m.end - 1)).foreach { m =>
+      .filter(m => lx.isCode(m.end - 1)).foreach { m =>
         val tokStart = m.start + m.group(1).length
         val safeStart =
           if (sql.substring(m.start, tokStart).contains('\n') ||
-              spans.exists { case (_, b) => b > m.start && b <= tokStart })
+              lx.spans.exists(sp => sp.end > m.start && sp.end <= tokStart))
             tokStart
           else m.start
         out.append(sql.substring(last, safeStart))
@@ -5570,16 +5052,14 @@ object Dialect {
     // the count is optional in ANSI/Postgres — `FETCH FIRST ROW WITH
     // TIES` defaults to 1 (r14 verdict item 4)
     val re = """(?i)\bFETCH\s+(?:FIRST|NEXT)\s+(?:(\d+)\s+)?ROWS?\s+WITH\s+TIES\b""".r
-    val spans0 = literalSpans(s0, backslashEscapes = true)
-    val depth0 = depthAt(s0, spans0)
-    val mAny = re.findAllMatchIn(s0)
-      .find(mm => outsideLiterals(spans0, mm.start))
-      .getOrElse(return sql)
+    val lx0 = SqlLexer(s0, backslashEscapes = true)
+    val depth0 = lx0.depth
+    val mAny = lx0.codeMatches(re).nextOption().getOrElse(return sql)
     if (depth0(mAny.start) > 0) {
       // SUBQUERY-level WITH TIES (r15 — a raw Spark parse error before):
       // rewrite the innermost parenthesized statement containing the
       // clause in place, then rescan (more subqueries may carry one)
-      val (open, close) = enclosingParen(s0, spans0, mAny.start)
+      val (open, close) = lx0.enclosingParen(mAny.start)
         .getOrElse(throw new graft.UnsupportedError(
           s"unbalanced subquery around WITH TIES in: $s0"))
       val inner = s0.substring(open + 1, close)
@@ -5590,7 +5070,7 @@ object Dialect {
         nullsAlwaysLast)
     }
     val m0 = mAny
-    val offIdx = topLevelKeyword(s0, spans0, depth0, "OFFSET")
+    val offIdx = lx0.topLevelKeyword("OFFSET")
     if (offIdx < 0)
       return buildWithTies(s0, Option(m0.group(1)).getOrElse("1"), m0.start, m0.end,
         nullsLargest = true, spark = spark, nullsAlwaysLast = nullsAlwaysLast,
@@ -5612,11 +5092,7 @@ object Dialect {
     // strip the OFFSET clause, re-locate the FETCH clause, and hand the
     // skip count to the builder's rank/row_number membership rule
     val s = s0.substring(0, om.start) + s0.substring(om.end)
-    val spans = literalSpans(s, backslashEscapes = true)
-    val depth = depthAt(s, spans)
-    val m = re.findAllMatchIn(s)
-      .find(mm => depth(mm.start) == 0 && outsideLiterals(spans, mm.start))
-      .getOrElse(return sql)
+    val m = SqlLexer(s, backslashEscapes = true).topLevelMatch(re).getOrElse(return sql)
     buildWithTies(s, Option(m.group(1)).getOrElse("1"), m.start, m.end,
       nullsLargest = true, offset = Some(om.group(1)), spark = spark,
       nullsAlwaysLast = nullsAlwaysLast, setOpOk = true,
@@ -5643,18 +5119,15 @@ object Dialect {
     val s0 = blankComments(sql, backslashEscapes = true).trim
     val re =
       """(?i)\bFETCH\s+(?:FIRST|NEXT)\s+(\d+(?:\.\d+)?)\s+PERCENT\s+ROWS?\s+(ONLY|WITH\s+TIES)\b""".r
-    val spans0 = literalSpans(s0, backslashEscapes = true)
-    val depth0 = depthAt(s0, spans0)
-    val m0 = re.findAllMatchIn(s0)
-      .find(mm => depth0(mm.start) == 0 && outsideLiterals(spans0, mm.start))
-      .getOrElse(return sql)
+    val lx0 = SqlLexer(s0, backslashEscapes = true)
+    val m0 = lx0.topLevelMatch(re).getOrElse(return sql)
     def build(s: String, m: scala.util.matching.Regex.Match,
         off: Option[String]): String =
       buildWithTies(s, m.group(1), m.start, m.end, nullsLargest = true,
         percent = true, ties = !m.group(2).equalsIgnoreCase("ONLY"),
         construct = "FETCH PERCENT", offset = off, spark = spark,
         setOpOk = true, qualifyIsClause = false)
-    val offIdx = topLevelKeyword(s0, spans0, depth0, "OFFSET")
+    val offIdx = lx0.topLevelKeyword("OFFSET")
     if (offIdx < 0) return build(s0, m0, None)
     // literal-OFFSET handling mirrors [[rewriteFetchFirstWithTies]]:
     // the whole clause must be a literal immediately before the FETCH
@@ -5670,11 +5143,7 @@ object Dialect {
         "OFFSET combined with FETCH … PERCENT requires a literal row count " +
           s"immediately before the FETCH clause, got: ${s0.substring(om.start, m0.start).trim}")
     val s = s0.substring(0, om.start) + s0.substring(om.end)
-    val spans = literalSpans(s, backslashEscapes = true)
-    val depth = depthAt(s, spans)
-    val m = re.findAllMatchIn(s)
-      .find(mm => depth(mm.start) == 0 && outsideLiterals(spans, mm.start))
-      .getOrElse(return sql)
+    val m = SqlLexer(s, backslashEscapes = true).topLevelMatch(re).getOrElse(return sql)
     build(s, m, Some(om.group(1)))
   }
 
@@ -5685,22 +5154,11 @@ object Dialect {
     */
   private[graft] def rewriteFetchFirst(sql: String): String = {
     // count optional: `FETCH FIRST ROW ONLY` is LIMIT 1 in ANSI/Postgres.
-    // The SCAN runs over comment-blanked text (r18 review: a FETCH
-    // spelled inside a comment must not splice, and a comment between
-    // the clause's tokens must not hide it); splices edit the original,
-    // so comments outside the replaced clause survive.
+    // A FETCH spelled inside a comment must not splice, and a comment
+    // between the clause's tokens must not hide it.
     val re = """(?i)\bFETCH\s+(?:FIRST|NEXT)\s+(?:(\d+)\s+)?ROWS?\s+ONLY""".r
-    val blanked = blankComments(sql, backslashEscapes = true)
-    val spans = literalSpans(blanked, backslashEscapes = true)
-    val out = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(blanked).filter(m => outsideLiterals(spans, m.start)).foreach { m =>
-      out.append(sql.substring(last, m.start))
-        .append(s"LIMIT ${Option(m.group(1)).getOrElse("1")}")
-      last = m.end
-    }
-    out.append(sql.substring(last))
-    out.toString
+    replaceInCode(sql, re, esc = true, blank = true)(
+      m => s"LIMIT ${Option(m.group(1)).getOrElse("1")}")
   }
 
   /** Snowflake `DAYNAME`/`MONTHNAME` — 3-letter English abbreviations
@@ -5863,16 +5321,16 @@ object Dialect {
       // alternative — must neither fire the rewrite nor skew the
       // argument paren match (the sibling star rewrite got the same
       // generalization this round)
-      val spans = opaqueSpans(cur, esc)._1
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)) match {
+      val lx = SqlLexer(cur, esc)
+      lx.codeMatches(re).nextOption() match {
         case None => return cur
         case Some(m) =>
           val joiner = m.group(1).trim.toUpperCase
           val open = m.end - 1
-          val close = matchParen(cur, spans, open)
+          val close = lx.matchParen(open)
           if (close < 0)
             throw new graft.UnsupportedError(s"unbalanced UNNEST( in: $cur")
-          val arrArgs = splitArgs(cur, spans, open + 1, close).map(_.trim)
+          val arrArgs = lx.splitArgs(open + 1, close).map(_.trim)
           if (arrArgs.isEmpty)
             throw new graft.UnsupportedError(
               "UNNEST requires at least one array expression")
@@ -6014,8 +5472,8 @@ object Dialect {
     var guard = 0
     while (guard < 64) {
       guard += 1
-      val spans = literalSpans(cur, esc)
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)) match {
+      val lx = SqlLexer(cur, esc)
+      lx.codeMatches(re).nextOption() match {
         case None => return cur
         case Some(m) =>
           val open = m.end - 1
@@ -6024,7 +5482,7 @@ object Dialect {
           var i = open
           var close = -1
           while (i < cur.length && close < 0) {
-            if (outsideLiterals(spans, i)) {
+            if (lx.isCode(i)) {
               val c = cur.charAt(i)
               if (c == '[') depth += 1
               else if (c == ']') { depth -= 1; if (depth == 0) close = i }
@@ -6078,21 +5536,18 @@ object Dialect {
     var guard = 0
     while (guard < 32) {
       guard += 1
-      val spans = literalSpans(cur, backslashEscapes = true)
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)) match {
+      val lx = SqlLexer(cur, backslashEscapes = true)
+      lx.codeMatches(re).nextOption() match {
         case None => return cur
         case Some(m) =>
           val outer = m.group(1) != null
           val rest0 = cur.substring(m.end)
-          val rSpans = literalSpans(rest0, backslashEscapes = true)
-          val rDepth = depthAt(rest0, rSpans)
-          val joinStop = joinCut.findAllMatchIn(rest0)
-            .find(jm => rDepth(jm.start) == 0 && outsideLiterals(rSpans, jm.start))
-            .map(_.start)
+          val rLx = SqlLexer(rest0, backslashEscapes = true)
+          val joinStop = rLx.topLevelMatch(joinCut).map(_.start)
           val stop = (clauseEnders
-            .map(k => topLevelKeyword(rest0, rSpans, rDepth, k)) ++ joinStop.toSeq)
+            .map(k => rLx.topLevelKeyword(k)) ++ joinStop.toSeq)
             .filter(_ >= 0).sorted.headOption.getOrElse(rest0.length)
-          val items = splitArgs(rest0, rSpans, 0, stop).map(_.trim).filter(_.nonEmpty)
+          val items = rLx.splitArgs(0, stop).map(_.trim).filter(_.nonEmpty)
           if (items.isEmpty)
             throw new graft.UnsupportedError("ARRAY JOIN requires an array expression")
           val itemRe = "(?is)^(.*\\S)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*)$".r
@@ -6137,28 +5592,26 @@ object Dialect {
     * carrying an AS pass through untouched.
     */
   private[graft] def rewriteTsqlPivot(sql: String): String = {
-    val spans = literalSpans(sql, backslashEscapes = true)
-    val matches = "(?i)\\bPIVOT\\s*\\(".r.findAllMatchIn(sql)
-      .filter(m => outsideLiterals(spans, m.start)).toList
+    val lx = SqlLexer(sql, backslashEscapes = true)
+    val matches = lx.codeMatches("(?i)\\bPIVOT\\s*\\(".r).toList
     if (matches.isEmpty) return sql
     var cur = sql
     // right-to-left so earlier match indices stay valid after edits
     matches.reverse.foreach { m =>
       val open = m.end - 1
-      val close = matchParen(cur, spans, open)
+      val close = lx.matchParen(open)
       if (close < 0)
         throw new graft.UnsupportedError(s"unbalanced PIVOT( in: $cur")
       val body = cur.substring(open + 1, close)
-      val bSpans = literalSpans(body, backslashEscapes = true)
-      val bDepth = depthAt(body, bSpans)
-      val inIdx = topLevelKeyword(body, bSpans, bDepth, "IN")
+      val bLx = SqlLexer(body, backslashEscapes = true)
+      val inIdx = bLx.topLevelKeyword("IN")
       if (inIdx < 0)
         throw new graft.UnsupportedError(s"PIVOT clause requires FOR … IN (…): $body")
       val inOpen = body.indexOf('(', inIdx)
-      val inClose = if (inOpen >= 0) matchParen(body, bSpans, inOpen) else -1
+      val inClose = if (inOpen >= 0) bLx.matchParen(inOpen) else -1
       if (inOpen < 0 || inClose < 0)
         throw new graft.UnsupportedError(s"unbalanced PIVOT IN (…) in: $body")
-      val mapped = splitArgs(body, bSpans, inOpen + 1, inClose).map(_.trim).map { it =>
+      val mapped = bLx.splitArgs(inOpen + 1, inClose).map(_.trim).map { it =>
         if (it.startsWith("'") || "(?i)\\bAS\\b".r.findFirstIn(it).isDefined) it
         else {
           val v = it.stripPrefix("`").stripSuffix("`")
@@ -6213,11 +5666,8 @@ object Dialect {
     // SELECT-adjacent optimizer hints survive the blanking and are
     // re-emitted on the inner select below.
     val sql = blankComments(sql0, backslashEscapes = true)
-    val spans = opaqueSpans(sql, backslashEscapes = true)._1
-    val depth = depthAt(sql, spans)
-    def topLevel(re: String): Option[scala.util.matching.Regex.Match] =
-      re.r.findAllMatchIn(sql)
-        .find(mm => depth(mm.start) == 0 && outsideLiterals(spans, mm.start))
+    val lx = SqlLexer(sql, backslashEscapes = true)
+    def topLevel(re: String) = lx.topLevelMatch(re.r)
     // offset spellings first — the bare pattern cannot match them (a `,`
     // or OFFSET sits where it requires BY), so the match is unambiguous
     val (m, off, n) =
@@ -6228,8 +5678,8 @@ object Dialect {
         .orElse(topLevel("(?i)\\bLIMIT\\s+(\\d+)\\s+BY\\b")
           .map(mm => (mm, 0L, mm.group(1).toLong)))
         .getOrElse(return sql0)
-    val selIdx = topLevelKeyword(sql, spans, depth, "SELECT")
-    val fromIdx = topLevelKeyword(sql, spans, depth, "FROM")
+    val selIdx = lx.topLevelKeyword("SELECT")
+    val fromIdx = lx.topLevelKeyword("FROM")
     if (selIdx != 0 || fromIdx < 0 || fromIdx > m.start)
       throw new graft.UnsupportedError(s"cannot locate SELECT … FROM around LIMIT BY in: $sql")
     // SELECT DISTINCT composes since r18: ClickHouse's pipeline applies
@@ -6241,13 +5691,13 @@ object Dialect {
     // named error. DISTINCT detection rides the shared hint-aware helper
     // (r18 review: the SELECT-anchored regex missed `SELECT /*+ … */
     // DISTINCT` — the hint is re-emitted on the inner select).
-    val (lbHint, isDistinct, itemsStart) = hintAndDistinct(sql, selIdx, spans,
+    val (lbHint, isDistinct, itemsStart) = hintAndDistinct(lx, selIdx,
       "LIMIT BY under SELECT DISTINCT ON is not supported")
-    val orderIdx0 = topLevelKeyword(sql, spans, depth, "ORDER", fromIdx)
+    val orderIdx0 = lx.topLevelKeyword("ORDER", fromIdx)
     val orderIdx = if (orderIdx0 >= 0 && orderIdx0 < m.start) orderIdx0 else -1
     val body = sql.substring(fromIdx, if (orderIdx >= 0) orderIdx else m.start).trim
     val items = expandStarItems(spark,
-      splitArgs(sql, spans, itemsStart, fromIdx)
+      lx.splitArgs(itemsStart, fromIdx)
         .map(_.trim).filter(_.nonEmpty),
       body, "LIMIT BY")
     val names = items.map(itemName(_, "LIMIT BY")).mkString(", ")
@@ -6257,7 +5707,7 @@ object Dialect {
     // PARTITION BY as malformed key text — fail fast naming it. Each
     // ender matches its CLAUSE shape, not the bare word, so a key column
     // that happens to be named `format` or `settings` stays a key.
-    val nextLimit = topLevelKeyword(sql, spans, depth, "LIMIT", byStart)
+    val nextLimit = lx.topLevelKeyword("LIMIT", byStart)
     val enderShapes = Seq(
       "SETTINGS" -> "(?i)\\bSETTINGS\\s+[A-Za-z_][A-Za-z0-9_.]*\\s*=",
       "FORMAT" -> "(?is)\\bFORMAT\\s+[A-Za-z_][A-Za-z0-9_]*\\s*;?\\s*$",
@@ -6265,10 +5715,7 @@ object Dialect {
       "INTERSECT" -> "(?i)\\bINTERSECT\\s+(?:(?:ALL|DISTINCT)\\s+)?SELECT\\b",
       "EXCEPT" -> "(?i)\\bEXCEPT\\s+(?:(?:ALL|DISTINCT)\\s+)?SELECT\\b")
     val otherEnder = enderShapes.flatMap { case (kw, re) =>
-      re.r.findAllMatchIn(sql)
-        .filter(mm => mm.start >= byStart && depth(mm.start) == 0 &&
-          outsideLiterals(spans, mm.start))
-        .map(kw -> _.start)
+      lx.topLevelMatch(re.r, byStart).map(kw -> _.start)
     }.sortBy(_._2).headOption
     otherEnder.foreach { case (kw, idx) =>
       if (nextLimit < 0 || idx < nextLimit)
@@ -6296,8 +5743,8 @@ object Dialect {
         .orElse(implicitAlias(it).map { case (e, a) => a.toLowerCase -> e })
     }.toMap
     def resolveAliases(ord: String): String = {
-      val oSpans = literalSpans(ord, backslashEscapes = true)
-      splitArgs(ord, oSpans, 0, ord.length).map(_.trim).map { part =>
+      val oLx = SqlLexer(ord, backslashEscapes = true)
+      oLx.splitArgs(0, ord.length).map(_.trim).map { part =>
         "(?s)^([A-Za-z_][A-Za-z0-9_]*)(.*)$".r.findFirstMatchIn(part) match {
           case Some(pm) if aliasExpr.contains(pm.group(1).toLowerCase) =>
             s"(${aliasExpr(pm.group(1).toLowerCase)})${pm.group(2)}"
@@ -6323,8 +5770,8 @@ object Dialect {
       val resolveKey =
         distinctKeyResolver(items, itemNames, "LIMIT BY under SELECT DISTINCT")
       def resolveOut(text: String, ordinals: Boolean): String = {
-        val tSpans = literalSpans(text, backslashEscapes = true)
-        splitArgs(text, tSpans, 0, text.length).map(_.trim).map { part =>
+        val tLx = SqlLexer(text, backslashEscapes = true)
+        tLx.splitArgs(0, text.length).map(_.trim).map { part =>
           val (e, sfx) = splitSortSuffix(part)
           val resolved =
             if (ordinals && e.matches("\\d+")) {
@@ -6372,13 +5819,13 @@ object Dialect {
     var guard = 0
     while (guard < 32) {
       guard += 1
-      val spans = literalSpans(cur, backslashEscapes = true)
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)) match {
+      val lx = SqlLexer(cur, backslashEscapes = true)
+      lx.codeMatches(re).nextOption() match {
         case None => return cur
         case Some(m) =>
           val outer = m.group(1).equalsIgnoreCase("OUTER")
           val open = m.end - 1
-          val close = matchParen(cur, spans, open)
+          val close = lx.matchParen(open)
           if (close < 0)
             throw new graft.UnsupportedError(s"unbalanced STRING_SPLIT( in: $cur")
           val args = cur.substring(open + 1, close)
@@ -6445,16 +5892,16 @@ object Dialect {
     var guard = 0
     while (guard < 32) {
       guard += 1
-      val spans = literalSpans(cur, esc)
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)) match {
+      val lx = SqlLexer(cur, esc)
+      lx.codeMatches(re).nextOption() match {
         case None => return cur
         case Some(m) =>
           val joiner = m.group(1).trim.toUpperCase
           val open = m.end - 1
-          val close = matchParen(cur, spans, open)
+          val close = lx.matchParen(open)
           if (close < 0)
             throw new graft.UnsupportedError(s"unbalanced GENERATE_SERIES( in: $cur")
-          val args = splitArgs(cur, spans, open + 1, close).map(_.trim)
+          val args = lx.splitArgs(open + 1, close).map(_.trim)
           if (args.length < 2 || args.length > 3)
             throw new graft.UnsupportedError(
               "GENERATE_SERIES table function expects (start, stop[, step])")
@@ -6500,12 +5947,12 @@ object Dialect {
     var guard = 0
     while (guard < 256) {
       guard += 1
-      val spans = literalSpans(cur, backslashEscapes = true)
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)) match {
+      val lx = SqlLexer(cur, backslashEscapes = true)
+      lx.codeMatches(re).nextOption() match {
         case None => return cur
         case Some(m) =>
           val open = m.end - 1
-          val close = matchParen(cur, spans, open)
+          val close = lx.matchParen(open)
           if (close < 0)
             throw new graft.UnsupportedError(s"unbalanced ${m.group(1)}( in: $cur")
           val idx = cur.substring(open + 1, close).trim
@@ -6514,7 +5961,7 @@ object Dialect {
           if (j >= cur.length || cur.charAt(j) != ']')
             throw new graft.UnsupportedError(
               s"expected ] after ${m.group(1)}($idx)")
-          val baseStart = primaryStartBefore(cur, spans, m.start)
+          val baseStart = primaryStartBefore(lx, m.start)
           val base = cur.substring(baseStart, m.start).trim
           if (base.isEmpty)
             throw new graft.UnsupportedError(
@@ -6542,39 +5989,40 @@ object Dialect {
   }
 
   /** Start index of the postfix primary ending just before `posEx`:
-    * walks backwards over identifier characters, `.` chains, and balanced
-    * `(...)`/`[...]` suffix groups.
+    * walks backwards over identifier characters, quoted identifiers, `.`
+    * chains, and balanced `(...)`/`[...]` suffix groups.
     */
-  private def primaryStartBefore(sql: String, spans: Vector[(Int, Int)],
-      posEx: Int): Int = {
+  private def primaryStartBefore(lx: SqlLexer, posEx: Int): Int = {
+    val sql = lx.sql
     var i = posEx - 1
     while (i >= 0 && sql.charAt(i).isWhitespace) i -= 1
-    var consumed = false
     while (i >= 0) {
       val c = sql.charAt(i)
-      if (!outsideLiterals(spans, i)) return i + 1
-      else if (c == ')' || c == ']') {
-        val o = backwardMatch(sql, spans, i)
-        if (o < 0) return i + 1
-        i = o - 1; consumed = true
-      } else if (c.isLetterOrDigit || c == '_' || c == '.' || c == '`') {
-        i -= 1; consumed = true
-      } else return i + 1
+      lx.spanAt(i) match {
+        case Some(sp) if sp.kind == SqlLexer.Ident => i = sp.start - 1
+        case Some(_) => return i + 1
+        case None if c == ')' || c == ']' =>
+          val o = backwardMatch(lx, i)
+          if (o < 0) return i + 1
+          i = o - 1
+        case None if c.isLetterOrDigit || c == '_' || c == '.' => i -= 1
+        case None => return i + 1
+      }
     }
     0
   }
 
-  /** Index of the opener matching the closer at `closeIdx`, scanning
-    * backwards (literal-aware); -1 when unbalanced.
+  /** Index of the opener matching the code closer at `closeIdx`, scanning
+    * backwards; -1 when unbalanced.
     */
-  private def backwardMatch(sql: String, spans: Vector[(Int, Int)],
-      closeIdx: Int): Int = {
+  private def backwardMatch(lx: SqlLexer, closeIdx: Int): Int = {
+    val sql = lx.sql
     val closeC = sql.charAt(closeIdx)
     val openC = if (closeC == ')') '(' else '['
     var depth = 0
     var i = closeIdx
     while (i >= 0) {
-      if (outsideLiterals(spans, i)) {
+      if (lx.isCode(i)) {
         val c = sql.charAt(i)
         if (c == closeC) depth += 1
         else if (c == openC) { depth -= 1; if (depth == 0) return i }
@@ -6621,15 +6069,15 @@ object Dialect {
     var guard = 0
     while (guard < 64) {
       guard += 1
-      val spans = literalSpans(cur, backslashEscapes = true)
-      re.findAllMatchIn(cur).find(m => outsideLiterals(spans, m.start)) match {
+      val lx = SqlLexer(cur, backslashEscapes = true)
+      lx.codeMatches(re).nextOption() match {
         case None => return cur
         case Some(m) =>
           val open = m.end - 1
-          val close = matchParen(cur, spans, open)
+          val close = lx.matchParen(open)
           if (close < 0)
             throw new graft.UnsupportedError(s"unbalanced FLATTEN( in: $cur")
-          val args = splitArgs(cur, spans, open + 1, close).map(_.trim)
+          val args = lx.splitArgs(open + 1, close).map(_.trim)
           var input: Option[String] = None
           var outer = false
           var path: Option[String] = None
@@ -6676,8 +6124,8 @@ object Dialect {
                 if (objectMode) {
                   val wc = "(?is)^named_struct\\s*\\(".r.findFirstMatchIn(in0)
                     .filter { cm =>
-                      val iSpans = literalSpans(in0, backslashEscapes = true)
-                      matchParen(in0, iSpans, cm.end - 1) == in0.length - 1
+                      val iLx = SqlLexer(in0, backslashEscapes = true)
+                      iLx.matchParen(cm.end - 1) == in0.length - 1
                     }
                   wc.map(cm => "map(" + in0.substring(cm.end)).getOrElse(in0)
                 } else in0
@@ -6710,9 +6158,8 @@ object Dialect {
           var metaFound = true
           while (metaFound && metaGuard < 256) {
             metaGuard += 1
-            val nSpans = literalSpans(next, backslashEscapes = true)
-            metaRe.findAllMatchIn(next)
-              .find(mm => outsideLiterals(nSpans, mm.start)) match {
+            val nLx = SqlLexer(next, backslashEscapes = true)
+            nLx.codeMatches(metaRe).nextOption() match {
               case None => metaFound = false
               case Some(mm) =>
                 val repl = mm.group(1).toLowerCase match {
@@ -6764,10 +6211,10 @@ object Dialect {
       if (args.length != 1)
         throw new graft.UnsupportedError("TRY takes exactly one expression")
       val a = args.head
-      val spans = literalSpans(a)
+      val lx = SqlLexer(a)
       def wholeCall(name: String): Option[String] = {
         ("(?is)^" + name + "\\s*\\(").r.findFirstMatchIn(a).flatMap { mm =>
-          val close = matchParen(a, spans, mm.end - 1)
+          val close = lx.matchParen(mm.end - 1)
           if (close >= 0 && a.substring(close + 1).trim.isEmpty)
             Some(a.substring(mm.end - 1)) // the parenthesized argument list
           else None
@@ -6778,7 +6225,7 @@ object Dialect {
         var at = -1
         var i = 0
         while (i < a.length) {
-          if (outsideLiterals(spans, i)) {
+          if (lx.isCode(i)) {
             val c = a.charAt(i)
             if (c == '(' || c == '[') depth += 1
             else if (c == ')' || c == ']') depth -= 1
@@ -6808,7 +6255,7 @@ object Dialect {
     * Tableau's functional conditional is IIF, never a bare `IF(...)`.
     */
   private[graft] def rewriteTableauIfBlock(sql: String): String =
-    renameWordsOutsideIdents(sql, Map("if" -> "CASE WHEN", "elseif" -> "WHEN"))
+    renameWords(sql, Map("if" -> "CASE WHEN", "elseif" -> "WHEN"), esc = true)
 
   /** `IIF(test, then, else[, unknown])` → null-aware simple CASE.
     * Tableau sends an UNKNOWN (NULL) test to the optional 4th argument

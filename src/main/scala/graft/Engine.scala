@@ -156,57 +156,27 @@ object Engine {
 
   /** Rewrite qualified references to registered nested tables into their
     * flat view names. Only names the caller registered are touched, and
-    * only OUTSIDE string literals (a literal `'db.t'` must survive); the
-    * replacement is literal (no regex group semantics for `$` in names).
+    * never inside a string literal or a comment (a literal `'db.t'` must
+    * survive); quoted identifiers and hints do flatten, since they name
+    * the table. `doubleQuotedIsString` decides whether `"db.t"` is a
+    * literal (Spark's default parser, MySQL) or an ANSI identifier that
+    * must flatten to resolve against the flat view. The replacement is
+    * literal (no regex group semantics for `$` in names).
     */
   private def flattenQualifiedNames(sql: String, names: Iterable[String],
-      doubleQuotedIsString: Boolean = true,
-      backslashEscapes: Boolean = true): String = {
-    val nested = names.filter(_.contains(".")).toSeq.sortBy(-_.length)
-    if (nested.isEmpty) return sql
-    val res = nested.foldLeft((sql: CharSequence)) { (cur, n) =>
+      doubleQuotedIsString: Boolean, backslashEscapes: Boolean): String =
+    names.filter(_.contains(".")).toSeq.sortBy(-_.length).foldLeft(sql) { (s, n) =>
+      val lx = new SqlLexer(s, backslashEscapes, doubleQuotedIsString)
       val re = ("(?i)\\b" + java.util.regex.Pattern.quote(n) + "\\b").r
-      val s = cur.toString
       val out = new StringBuilder
       var last = 0
       re.findAllMatchIn(s).foreach { m =>
-        if (!insideStringLiteral(s, m.start, doubleQuotedIsString, backslashEscapes)) {
+        val k = lx.kind(m.start)
+        if (k != SqlLexer.Str && k != SqlLexer.Comment) {
           out.append(s.substring(last, m.start)).append(flatName(n))
           last = m.end
         }
       }
-      out.append(s.substring(last))
-      out.toString
+      out.append(s.substring(last)).toString
     }
-    res.toString
-  }
-
-  /** Is position `pos` inside a string literal? Single-quoted always;
-    * double-quoted only when the dialect reads `"…"` as a STRING
-    * (Spark's default parser does — `"db.t"` must survive the name
-    * flattening — but ANSI dialects read it as an IDENTIFIER that must
-    * flatten to resolve against the flat view, so there the scanner
-    * treats `"…"` as code). Backtick-quoted identifiers are never
-    * skipped for the same reason. Backslash escapes are honored only for
-    * dialects whose literals use them ([[Dialect.literalBackslashEscapes]]
-    * — Spark/MySQL/Snowflake/BigQuery family); ANSI-literal dialects
-    * (DuckDB/Trino/Postgres/...) treat backslash as a plain character, so
-    * `'C:\'` closes at its quote there — honoring the escape would
-    * swallow the closing quote and corrupt every span after it.
-    */
-  private[graft] def insideStringLiteral(s: String, pos: Int,
-      doubleQuotedIsString: Boolean = true,
-      backslashEscapes: Boolean = true): Boolean = {
-    var quote: Char = 0
-    var i = 0
-    while (i < pos) {
-      val c = s.charAt(i)
-      if (quote != 0 && backslashEscapes && c == '\\') i += 1 // skip escaped char
-      else if (quote == 0 &&
-          (c == '\'' || (c == '"' && doubleQuotedIsString))) quote = c
-      else if (c == quote) quote = 0
-      i += 1
-    }
-    quote != 0
-  }
 }

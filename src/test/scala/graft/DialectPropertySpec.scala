@@ -35,11 +35,11 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     sqlGen.apply(Gen.Parameters.default, Seed(seed)).get
 
   private def literalContents(sql: String): List[String] =
-    Dialect.literalSpans(sql).map { case (s, e) =>
-      sql.substring(s + 1, e - 1).replace("''", "'")
+    SqlLexer(sql).spans.filter(_.kind == SqlLexer.Str).map { sp =>
+      sql.substring(sp.start + 1, sp.end - 1).replace("''", "'")
     }.toList
 
-  test("literalSpans recovers exactly the literals the text was built from") {
+  test("SqlLexer string spans recover exactly the generated literals") {
     (1L to 200L).foreach { seed =>
       val (sql, _, lits) = sample(seed)
       assert(literalContents(sql) === lits, s"seed=$seed sql=<$sql>")
@@ -68,10 +68,10 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     }
   }
 
-  test("renameFunctions preserves every literal byte-for-byte") {
+  test("renameWords over calls preserves every literal byte-for-byte") {
     (1L to 200L).foreach { seed =>
       val (sql, _, lits) = sample(seed)
-      val out = Dialect.renameFunctions(sql, Map("len" -> "length", "epoch" -> "ep"))
+      val out = Dialect.renameWords(sql, Map("len" -> "length", "epoch" -> "ep"), calls = true)
       assert(literalContents(out) === lits, s"seed=$seed sql=<$sql> out=<$out>")
     }
   }
@@ -86,13 +86,106 @@ class DialectPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
         catch { case _: UnsupportedError => None }
       rewritten.foreach { out =>
         assert(literalContents(out) === lits, s"seed=$seed sql=<$sql> out=<$out>")
-        val spans = Dialect.literalSpans(out)
+        val lx = SqlLexer(out)
         val outside = out.indices.filter(i =>
           i + 1 < out.length && out.charAt(i) == ':' && out.charAt(i + 1) == ':' &&
-            !spans.exists(s => i >= s._1 && i < s._2))
+            lx.isCode(i))
         assert(outside.isEmpty, s"seed=$seed residual :: in <$out>")
       }
     }
+  }
+
+  test("SqlLexer classifies literals, quoted identifiers, comments and hints in one pass") {
+    import SqlLexer.{Comment, Hint, Ident, Str}
+    def spans(sql: String, esc: Boolean = false) =
+      SqlLexer(sql, esc).spans.map(sp => (sql.substring(sp.start, sp.end), sp.kind)).toList
+    // quote doubling in all three quote styles; code between spans stays code
+    assert(spans("""SELECT "a""lt" FROM t WHERE x LT 'it''s ''lt''' AND `b``c` lt 2""") ===
+      List(("\"a\"\"lt\"", Ident), ("'it''s ''lt'''", Str), ("`b``c`", Ident)))
+    // a backslash escapes only where the dialect's literals honor it
+    assert(spans("'C:\\' x 'y'") === List(("'C:\\'", Str), ("'y'", Str)))
+    assert(spans("'it\\'s' x", esc = true) === List(("'it\\'s'", Str)))
+    // a quote inside a comment or a quoted identifier opens no literal
+    assert(spans("a -- don't\nb /* it's */ `x'y` 'z'") === List(("-- don't\n", Comment),
+      ("/* it's */", Comment), ("`x'y`", Ident), ("'z'", Str)))
+    // bracketed comments nest (Spark, Postgres, DuckDB); a hint is its own kind
+    assert(spans("s /* a /* b */ c */ /*+ B(t) */ x") ===
+      List(("/* a /* b */ c */", Comment), ("/*+ B(t) */", Hint)))
+    // an unclosed span runs to the end of the text
+    assert(spans("a 'b, c") === List(("'b, c", Str)))
+    // double quotes read as a string only where the dialect says so
+    assert(new SqlLexer("\"a\\\"b\" x", backslashEscapes = true, doubleQuotedIsString = true)
+      .spans.map(_.kind) === Seq(Str))
+    // paren depth, matching and argument splitting count code parens only
+    val lx = SqlLexer("f(a, ')', (b)) /* ( */ g")
+    assert(lx.matchParen(1) === 13)
+    assert(lx.depth(lx.sql.length) === 0)
+    assert(lx.splitArgs(2, 13).map(_.trim) === Seq("a", "')'", "(b)"))
+    assert(lx.enclosingParen(11) === Some((10, 12)))
+    assert(lx.enclosingParen(10) === Some((1, 13)))
+    assert(lx.enclosingParen(0) === None)
+    assert(lx.topLevelKeyword("g") === 23)
+  }
+
+  test("comments holding quotes at top-level gaps never change a dialect rewrite") {
+    val spark: org.apache.spark.sql.SparkSession = null
+    // one gate text per dialect family in Dialect.forName, each using its
+    // dialect's own constructs (none needs a session)
+    val gates = Seq(
+      "spark" -> "SELECT a, b FROM t WHERE a = 'x' ORDER BY b LIMIT 5",
+      "duckdb" -> ("SELECT a == 1 AS eq, strftime(d, '%Y') AS y, b // 2 AS h, " +
+        "c::BIGINT AS c2, len(s) AS n FROM t WHERE \"k\" == 'v'"),
+      "trino" -> ("SELECT strpos(s, 'a') AS p, codepoint(c) AS cp FROM t WHERE a == 1 " +
+        "ORDER BY p DESC FETCH FIRST 3 ROWS ONLY"),
+      "snowflake" -> ("SELECT IFF(a > 1, 'y', 'n') AS f, DATEADD(day, 5, d) AS d5, " +
+        "TO_VARCHAR(d, 'YYYY-MM') AS ym FROM t " +
+        "QUALIFY row_number() OVER (PARTITION BY a ORDER BY d) = 1"),
+      "bigquery" -> ("SELECT SAFE_CAST(a AS INT64) AS i, FORMAT_DATE('%Y', d) AS y, " +
+        "DATE_DIFF(d1, d2, DAY) AS dd FROM t WHERE REGEXP_CONTAINS(s, 'x')"),
+      "mysql" -> ("SELECT UCASE(s) AS u, DATE_FORMAT(d, '%Y-%m') AS ym, " +
+        "LOCATE('a', s) AS p FROM t LIMIT 10, 5"),
+      "postgres" -> ("SELECT a::TEXT AS t1, TO_CHAR(d, 'YYYY-MM') AS ym, " +
+        "EXTRACT(EPOCH FROM ts) AS e FROM t WHERE s ~ 'x' ORDER BY a DESC LIMIT 3"),
+      "sqlite" -> "SELECT strftime('%Y', d) AS y, a == 1 AS eq FROM t WHERE s GLOB 'a*'",
+      "oracle" -> ("SELECT DECODE(a, 1, 'one', 'other') AS dd, TO_CHAR(d, 'YYYY') AS y, " +
+        "SYSDATE AS now FROM t WHERE ROWNUM <= 5"),
+      "tsql" -> ("SELECT TOP 5 [a b] AS x, ISNULL(c, 0) AS c, DATEADD(day, 1, d) AS d1 " +
+        "FROM t ORDER BY x"),
+      "clickhouse" -> ("SELECT countIf(a > 1) AS n, uniqExact(b) AS u, toYear(d) AS y " +
+        "FROM t GROUP BY c ORDER BY n"),
+      "redshift" -> ("SELECT DATEADD(day, 1, d) AS d1, a::VARCHAR AS s, GETDATE() AS now " +
+        "FROM t WHERE s ~ 'x' ORDER BY d1 LIMIT 2"),
+      "teradata" -> ("SEL TOP 3 a, b MOD 2 AS m, ZEROIFNULL(c) AS z FROM t " +
+        "WHERE a GT 1 ORDER BY a"),
+      "tableau" -> ("SELECT IIF(a > 1, 'y', 'n') AS f, COUNTD(b) AS n, " +
+        "DATEPART('year', d) AS y FROM t GROUP BY 1"),
+      "exasol" -> "SELECT ADD_DAYS(d, 1) AS d1, DAYS_BETWEEN(d, e) AS n, ZEROIFNULL(c) AS z FROM t",
+      "druid" -> "SELECT TIME_FLOOR(ts, 'PT1H') AS h, DIV(a, 2) AS q, \"k\" FROM t")
+    assert(gates.map(g => Dialect.forName(g._1)).distinct.size === 16)
+    // compared after blanking comments and collapsing whitespace, because
+    // some rewrites legitimately drop a comment: QUALIFY (Snowflake) and
+    // TOP (T-SQL, Teradata) rebuild the statement from its comment-blanked
+    // text, so every comment goes; the null-placement pin blanks the
+    // comments inside the sort keys it pins (Trino, Postgres, Redshift);
+    // and the clause splices — FETCH FIRST, MySQL `LIMIT o, n`, Oracle's
+    // `WHERE ROWNUM <= n`, SQLite's GLOB — drop the comments inside the
+    // clause they replace
+    def norm(s: String) =
+      Dialect.collapseSpaces(Dialect.blankComments(s, backslashEscapes = true), esc = true).trim
+    val bad = for {
+      (name, text) <- gates
+      comment <- Seq("/* it's */ ", "-- don't\n")
+      lx = SqlLexer(text)
+      gap <- text.indices
+      // outside parens and T-SQL [bracket identifiers]
+      if text.charAt(gap) == ' ' && lx.isCode(gap) && lx.depth(gap) == 0 &&
+        text.lastIndexOf('[', gap) <= text.lastIndexOf(']', gap)
+      commented = text.substring(0, gap + 1) + comment + text.substring(gap + 1)
+      d = Dialect.forName(name)
+      out = try norm(d.rewrite(spark, commented)) catch { case e: Exception => e.toString }
+      if out != norm(d.rewrite(spark, text))
+    } yield s"$name <$commented> → <$out>"
+    assert(bad.isEmpty, bad.mkString("\n"))
   }
 
   test("translatePgFormat: template table, literal infixes, unknown letters raise") {

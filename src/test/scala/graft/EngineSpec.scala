@@ -106,6 +106,19 @@ class EngineSpec extends SparkSpec {
     assert(n.head.getLong(1) === 100L)
   }
 
+  test("name flattening: an apostrophe inside a comment opens no literal") {
+    // `don't` in a line comment must not hide the rest of the statement
+    // inside a bogus string literal, or db.t stays unflattened and the
+    // query fails analysis
+    val n = Engine.execute(spark, "SELECT * -- don't\nFROM db.t",
+      Map("db.t" -> t1)).count()
+    assert(n === 100L)
+    // a comment still never flattens, and a quoted identifier still does
+    val m = Engine.execute(spark, "SELECT COUNT(*) AS n /* db.t it's */ FROM \"db.t\"",
+      Map("db.t" -> t1), Dialect.DuckDbish).collect().head.getLong(0)
+    assert(m === 100L)
+  }
+
   test("events load probes the footer before flipping nanosAsLong") {
     import spark.implicits._
     val key = "spark.sql.legacy.parquet.nanosAsLong"
@@ -555,10 +568,11 @@ class EngineSpec extends SparkSpec {
       Dialect.rewriteOracleRownum("SELECT ROWNUM, a FROM t"))
     assert(Dialect.rewriteOracleRownum("SELECT 'ROWNUM <= 3' AS s FROM t") ===
       "SELECT 'ROWNUM <= 3' AS s FROM t") // literal untouched
-    assert(Dialect.rewriteWord("SELECT a FROM t MINUS SELECT a FROM u", "MINUS", "EXCEPT") ===
-      "SELECT a FROM t EXCEPT SELECT a FROM u")
-    assert(Dialect.rewriteWord("SELECT 'minus here' || SYSDATE FROM t", "SYSDATE",
-      "current_timestamp()") === "SELECT 'minus here' || current_timestamp() FROM t")
+    assert(Dialect.renameWords("SELECT a FROM t MINUS SELECT a FROM u",
+      Map("MINUS" -> "EXCEPT"), esc = true) === "SELECT a FROM t EXCEPT SELECT a FROM u")
+    assert(Dialect.renameWords("SELECT 'minus here' || SYSDATE FROM t",
+      Map("SYSDATE" -> "current_timestamp()"), esc = true) ===
+      "SELECT 'minus here' || current_timestamp() FROM t")
   }
 
   test("dialect: Snowflakeish constructs — textual rewrites") {
@@ -692,8 +706,8 @@ class EngineSpec extends SparkSpec {
       "SELECT split(s, '\\\\Q.\\\\E')")
     assert(Dialect.rewriteStringSplit("SELECT string_split(s, sep)") ===
       "SELECT split(s, concat('\\\\Q', sep, '\\\\E'))")
-    val ren = Dialect.renameFunctions("SELECT len(a), array_length(b), 'len(x)'",
-      Map("len" -> "length", "array_length" -> "size"))
+    val ren = Dialect.renameWords("SELECT len(a), array_length(b), 'len(x)'",
+      Map("len" -> "length", "array_length" -> "size"), calls = true)
     // 'len' inside array_length and inside the string literal stays put
     assert(ren === "SELECT length(a), size(b), 'len(x)'")
   }
