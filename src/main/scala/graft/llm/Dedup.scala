@@ -315,8 +315,11 @@ object Dedup {
     * DedupSpec gates the exact scenario.) Docs with no duplicate keep
     * themselves; always one row per document.
     *
-    * Cache contract (delegated to connectedComponents): every loop cache
-    * is released before return; the result is a projection over an eager
+    * Cache contract (delegated to connectedComponents): the verified
+    * pair edges are persisted once, so the LSH band-join + verify
+    * pipeline runs once per call; that cache and every loop cache are
+    * released before return, and the document-id universe is read once,
+    * by the final restore join. The result is a projection over an eager
     * `localCheckpoint`, so downstream actions never replay the LSH
     * pipeline. The checkpoint storage is the only retained state and is
     * released by dropping the result reference (the ContextCleaner frees

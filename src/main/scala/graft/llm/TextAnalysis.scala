@@ -39,10 +39,12 @@ object TextAnalysis {
     * and a cluster job opts into fault tolerance by configuring the
     * directory it already has.
     *
-    * Retention: the materialized frames BACK the returned DataFrame
-    * (the learn loop's 1-row round winners union into the result), so
-    * nothing is unpersisted inside the operator — blocks are reclaimed
-    * by Spark's ContextCleaner once the caller drops the frame.
+    * Retention: the word-frequency collapse and the 1-row round winners
+    * BACK the returned DataFrame (the winners union into the result), so
+    * the operator keeps them — blocks are reclaimed by Spark's
+    * ContextCleaner once the caller drops the frame. Each round's merged
+    * vocabulary is dead once the next round's is materialized; under
+    * Persisted the loop unpersists it then.
     * Reliable's checkpoint files additionally outlive the app unless
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true` is set —
     * a repeated-learn cluster job should either set it or point the
@@ -712,7 +714,11 @@ object TextAnalysis {
     * round's winning pair is a 1-row argmax frame, `localCheckpoint`ed
     * (the established loop-flattening discipline — a 1-row deterministic
     * frame, so partition invariance is unaffected) and broadcast-joined
-    * back so the NEXT round's `replace` takes the pair as COLUMNS. The
+    * back so the NEXT round's `replace` takes the pair as COLUMNS; the
+    * merged vocabulary is materialized the same way, so every round
+    * plans the same flat frame with ONE broadcast, not a cross-join per
+    * earlier round (a constant plan size also lets the codegen cache
+    * reuse round r's classes in round r+1). The
     * symbol stream is [[bpeEncode]]'s boundary-wrapped form, so each
     * merge is the same greedy whole-symbol replace the encoder applies.
     *
@@ -723,7 +729,8 @@ object TextAnalysis {
     * checkpoint every round would replay the corpus explode + collapse
     * shuffle (8 rounds = 8 corpus scans — an 8× waste at 100 TB). Every
     * round then costs one vocab-sized pair aggregation + a 1-row
-    * broadcast. Rounds are sequential by nature (BPE is an inherently
+    * broadcast + one vocab-sized materialization. Rounds are
+    * sequential by nature (BPE is an inherently
     * iterative algorithm); the per-round cost is corpus-independent
     * after the materialized collapse. Fault tolerance of the
     * materialized frames is pluggable via `materializer` (r14 — see
@@ -764,14 +771,27 @@ object TextAnalysis {
         .limit(1)
     }
     val out = Seq.newBuilder[DataFrame]
+    // `held` is the materialized vocabulary a round reads and `cur` its
+    // plan: an O(1) LogicalRDD over it (GraftBridge.flattenPlan). Under
+    // Persisted the cached plan would otherwise print every earlier
+    // round inside it (an InMemoryRelation shows its cached plan, AQE
+    // both its initial and final plan), and Spark formats the plan of
+    // every action — measured: without it, 8 persisted rounds ran a 4 GB
+    // heap out of memory in that formatting.
+    var held = words
     var cur = words
+    // a round's merged vocabulary is dead once the next one (or the last
+    // round's winner) is materialized; under Persisted it holds a cache
+    // entry, which is released here (a no-op for checkpointed frames).
+    // `words` stays, like the round winners it lineage-backs.
+    def releaseRoundFrame(f: DataFrame): Unit = if (f ne words) f.unpersist()
     // vocab row count sizes the scoped per-round shuffle width (r20,
     // guide §2.2 — see Tuning): every round is a vocab-sized pair
     // aggregation, orders of magnitude under the corpus the session
     // conf is sized for (measured: the 8-round learn spent 49 jobs on
     // 56 tasks — pure scheduling). The corpus collapse above already
     // ran at session width; only the rounds are scoped.
-    val vocabN = words.count() // materialized by mat(words); metadata-cheap
+    val vocabN = words.count() // one job over the frame mat(words) materialized
     graft.ops.Tuning.withLoopParallelism(docs.sparkSession, vocabN) {
       for (r <- 1 to rounds) {
         // 1-row deterministic frame; materializing keeps round r+1's plan
@@ -779,11 +799,22 @@ object TextAnalysis {
         val top = mat(topPair(cur))
         out += top.select(lit(r.toLong).as("round"), col("x"), col("y"),
           concat(col("x"), col("y")).as("merged"), col("n"))
-        cur = cur.crossJoin(broadcast(top.select(col("x"), col("y"))))
-          .select(col("wc"), replace(col("s"),
-            concat(lit(sep), col("x"), lit(sep2), col("y"), lit(sep)),
-            concat(lit(sep), col("x"), col("y"), lit(sep))).as("s"))
+        if (r < rounds) {
+          // the merged vocabulary is materialized too, so every round
+          // plans the same flat frame + ONE broadcast; an unmaterialized
+          // chain re-broadcasts all r earlier winners in round r
+          // (1+2+…+rounds broadcast jobs) and compiles a deeper plan
+          // every round
+          val next = mat(cur.crossJoin(broadcast(top.select(col("x"), col("y"))))
+            .select(col("wc"), replace(col("s"),
+              concat(lit(sep), col("x"), lit(sep2), col("y"), lit(sep)),
+              concat(lit(sep), col("x"), col("y"), lit(sep))).as("s")))
+          releaseRoundFrame(held)
+          held = next
+          cur = org.apache.spark.sql.GraftBridge.flattenPlan(next)
+        }
       }
+      releaseRoundFrame(held)
     }
     out.result().reduce(_ unionByName _).orderBy(col("round"))
   }

@@ -544,10 +544,14 @@ object Relational {
   def connectedComponents(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", nodes: Option[DataFrame] = None,
       maxRounds: Int = 30): DataFrame =
-    // every working cache below (und, nodeIds, labels, per-round frames)
-    // is re-read by later rounds — let AQE size them by bytes (r20)
+    // every working cache below (e, und, labels, per-round frames) is
+    // re-read by later rounds — let AQE size them by bytes (r20)
     Tuning.withAqeSizedCaches(edges.sparkSession) {
-    val e = edges.select(col(srcCol).as("__a"), col(dstCol).as("__b"))
+    // Persisted: the caller's edge lineage (in minHashDedup, the whole LSH
+    // band-join + verify pipeline) feeds both branches of the `und` union
+    // — which share no exchange — and both endpoint branches of the node
+    // universe; the cache runs it once for all four readers.
+    val e = edges.select(col(srcCol).as("__a"), col(dstCol).as("__b")).persist()
     val und = e.union(e.select(col("__b").as("__a"), col("__a").as("__b")))
       .filter(col("__a") =!= col("__b"))
       .distinct()
@@ -557,15 +561,13 @@ object Relational {
     // component, not absent.
     val endpoints = e.select(col("__a").as("node"))
       .union(e.select(col("__b").as("node")))
-    // Persisted: the universe's lineage may be an expensive generator,
-    // and the restore join after convergence re-reads it — before the
-    // subgraph iteration it seeded the (persisted) label table, so the
-    // input plan evaluated once; the persist keeps that property.
+    // Not persisted: the restore join after convergence is its only
+    // reader, so the caller's `nodes` lineage runs once; the endpoints
+    // half reads the `e` cache.
     val nodeIds = nodes
       .map(n => n.select(col(n.columns.head).as("node")).union(endpoints))
       .getOrElse(endpoints)
       .distinct()
-      .persist()
     // Only nodes on a real (non-self-loop) edge can ever change label —
     // the loop iterates over THEM alone; everyone else (incl. self-loop-
     // only nodes) is a singleton restored by the final left join.
@@ -578,13 +580,12 @@ object Relational {
     try {
       // materialize before the loop reuses it on several join sides; the
       // counts also size the loop's scoped shuffle width (r20, guide
-      // §2.2: per-round shuffles must track the working set — label,
-      // edge and node-universe rows — not the session conf; see Tuning)
+      // §2.2: per-round shuffles must track the working set — label and
+      // edge rows — not the session conf; see Tuning)
       val activeN = cached.count()
       val edgeN = und.count() // persisted above; materialized by the line before
-      val nodeN = nodeIds.count() // the restore join below is sized by this
-      Tuning.withLoopParallelism(edges.sparkSession,
-        math.max(math.max(activeN, edgeN), nodeN)) {
+      val fixpoint = Tuning.withLoopParallelism(edges.sparkSession,
+        math.max(activeN, edgeN)) {
       var labels = org.apache.spark.sql.GraftBridge.flattenPlan(cached)
       var round = 0
       var converged = false
@@ -623,17 +624,20 @@ object Relational {
       // Non-convergence therefore means maxRounds was lowered deliberately —
       // fail hard rather than return a partially-merged labeling.
       require(converged, s"connectedComponents did not converge in $maxRounds rounds")
-      // restore the full universe: nodes the loop never saw keep themselves
-      nodeIds.join(labels.select(col("node"), col("lbl")), Seq("node"), "left")
+      labels
+      }
+      // restore the full universe: nodes the loop never saw keep themselves.
+      // Runs at session width, outside the loop scope: the universe can be
+      // corpus-sized, and AQE coalesces the join when it is not.
+      nodeIds.join(fixpoint.select(col("node"), col("lbl")), Seq("node"), "left")
         .select(col("node"), coalesce(col("lbl"), col("node")).as("component"))
         .localCheckpoint(true)
-      }
     } finally {
       if (relaxedLive != null) relaxedLive.unpersist()
       if (jumpedLive != null) jumpedLive.unpersist()
       cached.unpersist()
-      nodeIds.unpersist()
       und.unpersist()
+      e.unpersist()
     }
     }
 
@@ -1232,7 +1236,8 @@ object Relational {
     * `spark_partition_id` must be FROZEN across the two consumers
     * (per-partition counts, the rank pass); without it each consumer
     * re-samples its own boundaries and the offsets are garbage.
-    * Adds `bucketCol` (LONG in 1..buckets) to `df`'s columns.
+    * Adds `bucketCol` (LONG in 1..buckets) to `df`'s columns; an input
+    * that already has a column of that name is rejected, not overwritten.
     *
     * At scale this is two narrow parallel shuffles (range + pid) over
     * (order-key, payload) rows instead of every row through ONE task;
@@ -1243,12 +1248,13 @@ object Relational {
       bucketCol: String = "bucket"): DataFrame = {
     require(buckets > 0, "buckets must be positive")
     import org.apache.spark.sql.expressions.Window
-    requireNoWorkingCols(df, "globalNtile", "__pid", "__rank", "__off", "__ntot")
-    // range width from a measured row count (metadata-cheap on
-    // scan-backed frames), not the session constant: a bench-scale input
-    // range-partitions into a handful of real partitions instead of a
-    // session-width wave of micro-partitions; corpus-scale inputs hit
-    // the session cap (see Tuning.loopPartitions).
+    requireNoWorkingCols(df, "globalNtile", "__pid", "__rank", "__off", "__ntot",
+      bucketCol)
+    // range width from a measured row count (one job; a full pass over
+    // `df` when it is not scan-backed), not the session constant: a
+    // bench-scale input range-partitions into a handful of real
+    // partitions instead of a session-width wave of micro-partitions;
+    // corpus-scale inputs hit the session cap (see Tuning.loopPartitions).
     val parts = Tuning.loopPartitions(df.count(),
       df.sparkSession.sessionState.conf.numShufflePartitions)
     val ranged = df.repartitionByRange(parts, order: _*)
@@ -1324,7 +1330,7 @@ object Relational {
     // INPUT bytes of the checkpointed set (a LogicalRDD with no stats),
     // so at bench scale the whole pair explosion ran in 1-2 tasks.
     // Repartition both sides by group at a width derived from the
-    // measured row count (the count is metadata-cheap on the checkpoint;
+    // measured row count (the count is one job over the checkpoint;
     // an explicit width is exempt from AQE re-coalescing): the join
     // reuses the single exchange on both sides and the explosion spreads
     // across the derived width at any scale.

@@ -173,6 +173,54 @@ class TextAnalysisSpec extends SparkSpec {
     }
   }
 
+  /** A corpus with at least 8 learnable merges. */
+  private def bpeCorpus = Seq(
+    (0L, "the quick brown fox jumps over the lazy dog"),
+    (1L, "then the other brown dogs jumped over the quiet fox"),
+    (2L, "theory and practice of tokenizer training on the corpus"),
+    (3L, "another quick test of the merge loop over those words"))
+    .toDF("doc_id", "text")
+
+  /** Jobs started while `body` runs (the bus is drained on both sides). */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    org.apache.spark.sql.GraftBridge.flushListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; org.apache.spark.sql.GraftBridge.flushListenerBus(spark) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    n.get
+  }
+
+  test("bpeLearnMerges job count grows linearly in rounds") {
+    initLog()
+    // each round plans the same flat frame + one broadcast; a loop that
+    // re-nests every earlier winner pays 1+2+…+rounds broadcast jobs
+    val docs = bpeCorpus
+    def jobs(rounds: Int): Int = jobsDuring {
+      TextAnalysis.bpeLearnMerges(docs, rounds = rounds,
+        materializer = Some(TextAnalysis.Materializer.Local))
+    }
+    assert(TextAnalysis.bpeLearnMerges(docs, rounds = 8).count() === 8)
+    val (j4, j8) = (jobs(4), jobs(8))
+    assert(j8 <= 2 * j4, s"jobs(4)=$j4 jobs(8)=$j8")
+  }
+
+  test("bpeLearnMerges under Persisted keeps rounds + 1 caches") {
+    initLog()
+    // the vocabulary collapse plus one winner per round back the result;
+    // the per-round merged vocabularies are released inside the loop
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val merges = TextAnalysis.bpeLearnMerges(bpeCorpus, rounds = 8,
+      materializer = Some(TextAnalysis.Materializer.Persisted))
+    assert(merges.count() === 8)
+    val retained = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(retained.size <= 9, s"retained caches: $retained")
+  }
+
   test("bm25Rank scores and ranks a known corpus exactly") {
     initLog()
     val docs = Seq(

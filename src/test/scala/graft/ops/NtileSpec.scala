@@ -46,4 +46,12 @@ class NtileSpec extends SparkSpec {
     compare((1 to 5000).map(i => (rnd.nextLong(), i.toLong)), 8)
     compare((1 to 5000).map(i => (0L, i.toLong)), 8) // total order only via id
   }
+
+  test("globalNtile rejects an input that already has the bucket column") {
+    import spark.implicits._
+    val df = Seq((1L, 9L), (2L, 8L)).toDF("v", "bucket")
+    intercept[IllegalArgumentException](Relational.globalNtile(df, 2, Seq(col("v"))))
+    intercept[IllegalArgumentException](
+      Relational.globalNtile(df, 2, Seq(col("bucket")), bucketCol = "v"))
+  }
 }

@@ -327,6 +327,21 @@ class RelationalSpec extends SparkSpec {
     assert(retained.size <= 1, s"leaked caches: $retained") // the result checkpoint
   }
 
+  test("connectedComponents evaluates its edge lineage once") {
+    // the edge lineage stands in for an expensive caller pipeline (in
+    // minHashDedup, the LSH band-join + verify): the union's two branches
+    // and the node universe must all read it from one evaluation
+    val evals = spark.sparkContext.longAccumulator("edge-evals")
+    val pairs = (1L to 40L).sliding(2).map(p => (p(0), p(1))).toSeq ++
+      Seq((50L, 51L), (60L, 60L))
+    val edges = spark.sparkContext.parallelize(pairs, 3)
+      .map { p => evals.add(1); p }.toDF("src", "dst")
+    val out = Relational.connectedComponents(edges,
+      nodes = Some((1L to 70L).toDF("node")))
+    assert(out.count() === 70)
+    assert(evals.sum === pairs.size, s"edge rows evaluated ${evals.sum} times")
+  }
+
   test("snapshotDiff classifies added/removed/changed and hides unchanged") {
     val a = Seq((1L, "x", 10L), (2L, "y", 20L), (3L, "z", 30L),
       (4L, null.asInstanceOf[String], 40L)).toDF("k", "s", "v")
